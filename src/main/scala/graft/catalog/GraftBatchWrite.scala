@@ -38,7 +38,7 @@ import graft.ops.Txn
   *
   * `mode` picks the manifest semantics at commit:
   *   - Append    — manifest-extension append ([[Txn.publishDirAppend]])
-  *   - Replace   — full-snapshot publish ([[Txn.publishDirFull]]):
+  *   - Replace   — full-snapshot publish ([[Txn.publishDir]]):
   *     INSERT OVERWRITE / TRUNCATE-backed writes AND the group-based
   *     row-level operations (UPDATE / MERGE INTO), whose incoming rows
   *     are the complete post-operation table contents. */
@@ -220,13 +220,8 @@ private[catalog] class GraftBatchWrite(root: String, schema: StructType,
         // publish CAS-pinned at that version (r11 advice medium): a
         // concurrent append/delete landing between the pin and this
         // publish fails the Replace loud instead of being silently
-        // clobbered — the commitIf contract, natively
-        pinnedBase match {
-          case Some(base) =>
-            Txn.publishDirFullIf(spark, root, dataRel, base, meta)
-          case None =>
-            Txn.publishDirFull(spark, root, dataRel, meta)
-        }
+        // clobbered — the pinned-commit contract, natively
+        Txn.publishDir(spark, root, dataRel, pinnedBase, meta)
         ()
       case GraftBatchWrite.Replace =>
         // a replace that produced zero rows (e.g. UPDATE/MERGE emptying
@@ -234,12 +229,7 @@ private[catalog] class GraftBatchWrite(root: String, schema: StructType,
         // commit an empty snapshot with the declared schema
         val empty = spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        pinnedBase match {
-          case Some(base) =>
-            Txn.commitIf(empty, root, base, meta = meta)
-          case None =>
-            Txn.commit(empty, root, meta = meta)
-        }
+        Txn.commit(empty, root, meta = meta, expectedBase = pinnedBase)
         ()
     }
   }

@@ -80,6 +80,16 @@ object Q {
       try df.unpersist(blocking = false) catch { case _: Throwable => () }
     }
 
+  /** A `spark.graft.*` integer conf, or `default` when unset. A value
+    * that does not parse fails naming the key, never a bare
+    * NumberFormatException and never a silent fall back to the default. */
+  private[graft] def confLong(spark: SparkSession, key: String,
+      default: Long): Long =
+    spark.conf.getOption(key).fold(default) { v =>
+      v.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"conf $key must be an integer, got '$v'"))
+    }
+
   /** r14 — recover parallelism for heavy per-row work over a SMALL scan
     * (guide §1.2 per-task work; §2.5 input skew "one huge unsplittable
     * file"). A parquet file smaller than one scan split arrives as ONE
@@ -141,7 +151,7 @@ object Q {
     // tokenize paths (e.g. 64-long embedding decodes feeding repeated
     // cached map passes) may pass an explicit target; 0 = session conf
     val target = math.max(1L, if (targetBytesPerTask > 0) targetBytesPerTask
-      else spark.conf.get("spark.graft.spread.targetBytesPerTask", "49152").toLong)
+      else confLong(spark, "spark.graft.spread.targetBytesPerTask", 49152L))
     val w = ((size + target - 1) / target).min(BigInt(dp)).toInt
     if (w > 1) df.repartition(w, key) else df
   }

@@ -38,8 +38,8 @@ import org.apache.spark.sql.functions._
   * design carried: [[commitAppend]] gives incremental ADD-file commits
   * (a version's manifest lists many dirs; appending a shard to a
   * 100 TB table costs O(shard), and the CDC feed serves appends at
-  * file level without diffing), [[commitIf]] gives serializable
-  * conflict detection for rewrites, and [[commitDelete]] gives
+  * file level without diffing), [[commit]]'s `expectedBase` gives
+  * serializable conflict detection for rewrites, and [[commitDelete]] gives
   * O(deleted-keys) row-level deletes via tombstone entries (Delta's
   * deletion-vector role; readers fold entries in log order, and a
   * periodic compacting [[commit]] collapses the chain). The remaining
@@ -339,10 +339,14 @@ object Txn {
   /** Write `df` as a fresh immutable snapshot dir (plus its optional
     * stats sidecar) and return its root-relative path — the shared
     * first phase of every commit flavor (r9 review: previously
-    * triplicated across commit/commitIf/appendCore). */
+    * triplicated across the full, pinned and append commits). */
   private def writeSnapshot(df: DataFrame, root: String,
       statsCols: Seq[String], partitionBy: Option[String] = None,
       bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 20): String = {
+    partitionBy.toSeq.flatMap(partitionCols).foreach { c =>
+      require(df.schema.fieldNames.contains(c),
+        s"partition column $c absent from the batch schema")
+    }
     val spark = df.sparkSession
     val dataRel = s"data/${java.util.UUID.randomUUID().toString}"
     val w = df.write.mode("overwrite")
@@ -419,10 +423,101 @@ object Txn {
     tmp
   }
 
-  /** Commit `df` as the next version of the table at `root`; returns
-    * the committed version number. The data write happens BEFORE any
-    * publish step — a crash anywhere leaves the previous version
-    * untouched and visible.
+  /** The version every publish attempt builds on: the highest committed
+    * version, 0 for a table with none. */
+  private def tip(f: FileSystem, root: String): Long =
+    committedVersions(f, root).foldLeft(0L)(math.max)
+
+  private def requireBase(root: String, base: Long, expected: Long): Unit =
+    if (base != expected)
+      throw new java.util.ConcurrentModificationException(
+        s"table at $root moved to version $base while this writer " +
+          s"computed from $expected; re-read and recompute")
+
+  /** THE publish protocol — the one code path that puts a manifest on
+    * `_commits/`. Each attempt resolves the tip `b`, asks `body(b)` for
+    * the manifest text of version `b + 1` (None aborts: an idempotent
+    * replay), stages it under `_tmp/` and renames it to
+    * `_commits/<b+1>` under the per-root lock, re-stamping the mtime on
+    * a win ([[stampPublish]]).
+    *
+    * `expectedBase = None` REBASES: a lost race retries on the next tip,
+    * re-running `body` against the racer's manifest — blind appends,
+    * deletes and restores commute with racers. `Some(e)` PINS (OCC):
+    * only `e + 1` may be taken, and a moved tip or a lost rename throws
+    * [[java.util.ConcurrentModificationException]] — a rewrite computed
+    * from `e` must never silently discard a racer's commit.
+    *
+    * A lost rename whose slot holds something other than a manifest
+    * file (a stray directory — [[committedVersions]] never counts it, so
+    * the tip cannot move) fails loud naming the path instead of
+    * spinning; a rename that failed with the slot still free (vacuumed
+    * staging, transient FS fault) retries, and the attempt bound turns a
+    * persistent fault into an error (r10 advice). Every lost attempt's
+    * staged manifest is deleted. */
+  private def publish(f: FileSystem, root: String, expectedBase: Option[Long],
+      tag: String)(body: Long => Option[String]): Option[Long] = {
+    val id = s"$tag-${java.util.UUID.randomUUID()}"
+    var attempt = 0
+    while (true) {
+      attempt += 1
+      require(attempt <= 10000,
+        s"commit at $root failed to publish after $attempt attempts — " +
+          "filesystem fault or runaway contention")
+      val base = tip(f, root)
+      expectedBase.foreach(requireBase(root, base, _))
+      val text = body(base) match {
+        case Some(t) => t
+        case None    => return None
+      }
+      val tmp = stageManifest(f, root, s"$id-$attempt", text)
+      val target = new Path(s"$root/_commits/${base + 1}")
+      val won = publishLock(root).synchronized {
+        !f.exists(target) && f.rename(tmp, target) && stampPublish(f, target)
+      }
+      if (won) return Some(base + 1)
+      f.delete(tmp, false)
+      if (f.exists(target) && !f.getFileStatus(target).isFile)
+        throw new IllegalStateException(
+          s"cannot publish version ${base + 1} at $root: $target exists " +
+            "but is not a manifest file — remove it")
+      if (expectedBase.nonEmpty)
+        throw new java.util.ConcurrentModificationException(
+          s"version ${base + 1} at $root was taken concurrently; " +
+            "re-read and recompute")
+    }
+    None // unreachable
+  }
+
+  /** Manifest text extending version `base`'s entry list with `added`
+    * — the shape of every append, delete, upsert and metadata commit. */
+  private def extendedBody(f: FileSystem, root: String, base: Long,
+      added: Seq[String], meta: Map[String, String]): String = {
+    require(base >= 1,
+      s"cannot extend the uninitialized table at $root — commit first")
+    manifestBody((manifestDirs(f, root, base) ++ added).mkString(","), meta)
+  }
+
+  /** The `+`-joined tombstone key spec of `keyCols` (r12 composite
+    * form; one column is the 1-column case). The entry is parsed as
+    * `~<dir>@<a+b>` inside a comma-separated manifest line, so a
+    * metacharacter in a column name would corrupt the manifest for
+    * every future reader (r10 advice). */
+  private def keySpec(keyCols: Seq[String]): String = {
+    require(keyCols.nonEmpty && keyCols.distinct == keyCols,
+      s"tombstone key columns must be non-empty and distinct: $keyCols")
+    keyCols.foreach { c =>
+      require(!c.contains(',') && !c.contains('\n') && !c.contains('@') &&
+        !c.contains('+'),
+        s"tombstone key column must be free of ',', '@', '+' and newlines: $c")
+    }
+    keyCols.mkString("+")
+  }
+
+  /** Commit `df` as the next FULL-snapshot version of the table at
+    * `root`; returns the committed version number. The data write
+    * happens BEFORE any publish step — a crash anywhere leaves the
+    * previous version untouched and visible.
     *
     * `statsCols` (data skipping): for each named LONG-castable column,
     * per-file min/max are computed from the freshly-written snapshot and
@@ -432,45 +527,65 @@ object Txn {
     * after). [[readPruned]] then opens only the files whose range
     * overlaps a predicate — the Delta/Iceberg file-skipping core. Stats
     * cost one extra scan of the new snapshot at commit time (file-local
-    * aggregation, no shuffle: the groupBy key IS the input file). */
+    * aggregation, no shuffle: the groupBy key IS the input file).
+    *
+    * `partitionBy` (HIVE-PARTITIONED layout, r10): the snapshot dir is
+    * laid out as `data/<uuid>/<partCol>=<value>/part-*.parquet` (a
+    * comma-separated spec nests levels, r13) and the manifest records
+    * `partitionCol`. The partition column materializes from the
+    * directory names on read, and partition-level skipping
+    * ([[readPartitionPruned]]) needs no sidecar: the directory listing
+    * IS the index. Pair with [[commitAppend]]'s `partitionBy` for the
+    * canonical ingest-one-day-at-a-time loop.
+    *
+    * `bloomCols`/`bloomBits`: per-file `_bloom.tsv` sidecars for point
+    * skipping via [[readPoint]], computed in the same sidecar job as the
+    * stats.
+    *
+    * `checks` (CHECK constraints, r10, Delta's table constraints): every
+    * expression must hold on EVERY row or nothing is published — the
+    * snapshot is validated AS WRITTEN (read back from the fresh dir, so
+    * what's checked is exactly what readers would see) before the
+    * manifest rename, and a violation fails loud with a sample of
+    * offending rows while the table stays at its previous version (the
+    * orphan snapshot is vacuum fodder). SQL CHECK semantics: a NULL
+    * result is not a violation; NOT NULL is `col IS NOT NULL`.
+    *
+    * `expectedBase` (OPTIMISTIC CONCURRENCY): publish only if the table
+    * is still at this version (the one the writer read before
+    * computing). A full-snapshot rewrite computed from version B
+    * silently DISCARDS any version committed between B and the publish
+    * — without a pin the publish only serializes version numbers (a
+    * taken number is skipped, not overwritten). Pinned losers throw
+    * [[java.util.ConcurrentModificationException]] and must re-read +
+    * recompute; the check runs once before the data write (a stale
+    * writer pays nothing) and again at the publish rename, the
+    * linearization point. */
   def commit(df: DataFrame, root: String, statsCols: Seq[String] = Nil,
-      meta: Map[String, String] = Map.empty): Long = {
-    val f = fs(df.sparkSession, root)
-    val dataRel = writeSnapshot(df, root, statsCols)
-    publishFull(f, root, dataRel, manifestBody(dataRel, meta))
-  }
-
-  /** CAS-publish a staged full-snapshot manifest: retry the rename at
-    * the next version number until we win (rename-without-overwrite
-    * fails if a concurrent writer took N first). */
-  private def publishFull(f: FileSystem, root: String, dataRel: String,
-      body: String): Long = {
-    var tmp = stageManifest(f, root, dataRel.stripPrefix("data/"), body)
-    var n = committedVersions(f, root).foldLeft(0L)(math.max) + 1
-    var published = false
-    var attempt = 0
-    while (!published) {
-      // a failed rename does NOT always mean the version was taken: the
-      // staged manifest may be gone (concurrent vacuum of _tmp, transient
-      // FS fault) — re-stage it before retrying, and bound the loop so a
-      // persistent fault fails loud instead of spinning on n forever
-      // (r10 advice)
-      attempt += 1
-      require(attempt <= 10000,
-        s"commit at $root failed to publish after $attempt attempts " +
-          s"(last tried version $n) — filesystem fault or runaway contention")
-      if (!f.exists(tmp))
-        tmp = stageManifest(f, root,
-          s"${dataRel.stripPrefix("data/")}-$attempt", body)
-      val target = new Path(s"$root/_commits/$n")
-      publishLock(root).synchronized {
-        if (f.exists(target)) n += 1
-        else if (f.rename(tmp, target)) { stampPublish(f, target); published = true }
-        else if (f.exists(target)) n += 1
-        // else: rename failed with the slot still free — loop re-stages
+      meta: Map[String, String] = Map.empty,
+      partitionBy: Option[String] = None,
+      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 20,
+      checks: Seq[String] = Nil,
+      expectedBase: Option[Long] = None): Long = {
+    require(bloomBits % 64 == 0 && bloomBits > 0,
+      s"bloomBits must be a positive multiple of 64, got $bloomBits")
+    val spark = df.sparkSession
+    val f = fs(spark, root)
+    expectedBase.foreach(requireBase(root, tip(f, root), _))
+    val dataRel = writeSnapshot(df, root, statsCols, partitionBy,
+      bloomCols, bloomBits)
+    if (checks.nonEmpty) {
+      val snap = readDir(spark, f, s"$root/$dataRel")
+      checks.foreach { c =>
+        val sample = snap.where(!expr(c)).limit(3).collect()
+        if (sample.nonEmpty)
+          throw new IllegalStateException(
+            s"constraint violated, commit aborted (table unchanged): CHECK ($c) " +
+              s"fails on rows like ${sample.mkString("; ").take(500)}")
       }
     }
-    n
+    publishDir(spark, root, dataRel, expectedBase,
+      meta ++ partitionBy.map("partitionCol" -> _))
   }
 
   /** True when `a` and `b` sit on the same LOSSLESS widening chain
@@ -550,7 +665,7 @@ object Txn {
     * keep their sidecars current on every INSERT — published atomically
     * with the data because the pointer swap happens after. Costs one
     * extra scan of the NEW dir per declared sidecar kind (O(batch),
-    * the same bill the programmatic commitIndexed pays). */
+    * the same bill the programmatic `commit(bloomCols = …)` pays). */
   private[graft] def writeSidecars(spark: SparkSession, root: String,
       dataRel: String, statsCols: Seq[String], bloomCols: Seq[String],
       bloomBits: Int = 1 << 20): Unit = {
@@ -560,24 +675,15 @@ object Txn {
 
   /** Publish an ALREADY-WRITTEN snapshot dir as the next FULL version
     * (r11, the native V2 writer's commit half: executors have streamed
-    * parquet into `root/<dataRel>` — invisible until this rename). */
-  private[graft] def publishDirFull(spark: SparkSession, root: String,
-      dataRel: String, meta: Map[String, String] = Map.empty): Long =
-    publishFull(fs(spark, root), root, dataRel, manifestBody(dataRel, meta))
-
-  /** OCC-pinned [[publishDirFull]] (r12, r11 advice medium): publish an
-    * already-written snapshot dir as version `expectedBase + 1` ONLY if
-    * the table is still at `expectedBase` — the [[commitIf]] contract
-    * for the native V2 write path. A full-snapshot REPLACE computed
-    * from a pinned scan silently discards any commit that landed
-    * between the pin and the publish; losers throw
-    * [[java.util.ConcurrentModificationException]] loud (the orphan
-    * snapshot is vacuum fodder, never visible). */
-  private[graft] def publishDirFullIf(spark: SparkSession, root: String,
-      dataRel: String, expectedBase: Long,
+    * parquet into `root/<dataRel>` — invisible until this rename).
+    * `expectedBase` pins the publish exactly as in [[commit]] (r12, r11
+    * advice medium): a REPLACE computed from a pinned scan must fail
+    * loud rather than discard a commit that landed after the pin. */
+  private[graft] def publishDir(spark: SparkSession, root: String,
+      dataRel: String, expectedBase: Option[Long] = None,
       meta: Map[String, String] = Map.empty): Long =
-    casPublish(spark, root, expectedBase, dataRel.stripPrefix("data/"),
-      manifestBody(dataRel, meta))
+    publish(fs(spark, root), root, expectedBase, "commit")(
+      _ => Some(manifestBody(dataRel, meta))).get
 
   /** OCC-pinned DELTA publish (r12, the native half of the SQL delta
     * row-level ops): extend `expectedBase`'s manifest with an optional
@@ -593,22 +699,12 @@ object Txn {
       rowsRel: Option[String], meta: Map[String, String] = Map.empty): Long = {
     require(keysRel.nonEmpty || rowsRel.nonEmpty,
       "delta publish needs keys, rows, or both")
-    require(keyCols.nonEmpty && keyCols.distinct == keyCols,
-      s"delta key columns must be non-empty and distinct: $keyCols")
-    keyCols.foreach { keyCol =>
-      require(!keyCol.contains(',') && !keyCol.contains('\n') &&
-        !keyCol.contains('@') && !keyCol.contains('+'),
-        s"delta key column must be free of ',', '@', '+' and newlines: $keyCol")
-    }
     // composite keys land as the r12 `~dir@a+b` tombstone form — every
     // reader already folds the tuple anti-join (r13, r12 verdict item 3)
-    val keySpec = keyCols.mkString("+")
+    val spec = keySpec(keyCols)
     val f = fs(spark, root)
-    val dirs = manifestDirs(f, root, expectedBase) ++
-      keysRel.map(k => s"~$k@$keySpec").toSeq ++ rowsRel.toSeq
-    casPublish(spark, root, expectedBase,
-      s"delta-${java.util.UUID.randomUUID()}",
-      manifestBody(dirs.mkString(","), meta))
+    publish(f, root, Some(expectedBase), "delta")(b => Some(extendedBody(
+      f, root, b, keysRel.map(k => s"~$k@$spec").toSeq ++ rowsRel, meta))).get
   }
 
   /** DYNAMIC PARTITION OVERWRITE publish (r13, r12 verdict item 6):
@@ -653,21 +749,30 @@ object Txn {
         unescapePathName(raw)
       }
     }.distinct
-    // type the tuples at the TABLE schema (the dir names are strings;
-    // the anti-join must compare at the column type, same cast rule as
-    // the partition-column reconstruction in scanPruned)
+    replacePartitions(spark, root, expectedBase, partColsSeq, tuples,
+      Some(dataRel), meta)
+  }
+
+  /** The shared publish of both partition replaces: write the partition
+    * key `tuples` (raw string values, one per column of `cols`) as a
+    * tombstone dir typed at the TABLE schema — the dir names and
+    * statement literals are strings, but the anti-join must compare at
+    * the column type, the same cast rule as the partition-column
+    * reconstruction in scanPruned — then publish
+    * `…prior, ~tuples@cols, dataRel` pinned at `expectedBase`. */
+  private def replacePartitions(spark: SparkSession, root: String,
+      expectedBase: Long, cols: Seq[String], tuples: Seq[Seq[String]],
+      dataRel: Option[String], meta: Map[String, String]): Long = {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val schema = readVersion(spark, root, expectedBase).schema
-    val strSchema = org.apache.spark.sql.types.StructType(partColsSeq.map(c =>
-      org.apache.spark.sql.types.StructField(c,
-        org.apache.spark.sql.types.StringType, nullable = false)))
     val strDf = spark.createDataFrame(
       spark.sparkContext.parallelize(
-        tuples.map(t => org.apache.spark.sql.Row(t: _*)), 1), strSchema)
-    val typed = strDf.select(partColsSeq.map(c =>
-      col(c).cast(schema(c).dataType).as(c)): _*)
-    val keysRel = writeSnapshot(typed, root, Nil)
-    publishDeltaIf(spark, root, expectedBase, partColsSeq, Some(keysRel),
-      Some(dataRel), meta)
+        tuples.map(t => org.apache.spark.sql.Row(t: _*)), 1),
+      StructType(cols.map(StructField(_, StringType, nullable = false))))
+    val keysRel = writeSnapshot(strDf.select(cols.map(c =>
+      col(c).cast(schema(c).dataType).as(c)): _*), root, Nil)
+    publishDeltaIf(spark, root, expectedBase, cols, Some(keysRel), dataRel,
+      meta)
   }
 
   /** STATIC partition replace (r13, `INSERT OVERWRITE t PARTITION
@@ -686,20 +791,8 @@ object Txn {
         s"cannot replace the NULL partition of $c: a null key matches " +
           "no rows in the tombstone anti-join — rewrite it explicitly")
     }
-    val schema = readVersion(spark, root, expectedBase).schema
-    val cols = colVals.map(_._1)
-    val strSchema = org.apache.spark.sql.types.StructType(cols.map(c =>
-      org.apache.spark.sql.types.StructField(c,
-        org.apache.spark.sql.types.StringType, nullable = false)))
-    val strDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        org.apache.spark.sql.Row(colVals.map(_._2.toString): _*)), 1),
-      strSchema)
-    val typed = strDf.select(cols.map(c =>
-      col(c).cast(schema(c).dataType).as(c)): _*)
-    val keysRel = writeSnapshot(typed, root, Nil)
-    publishDeltaIf(spark, root, expectedBase, cols, Some(keysRel),
-      dataRel, meta)
+    replacePartitions(spark, root, expectedBase, colVals.map(_._1),
+      Seq(colVals.map(_._2.toString)), dataRel, meta)
   }
 
   /** [[publishPartitionReplace]] from a DataFrame (the V1 write-bridge
@@ -735,39 +828,10 @@ object Txn {
       expectedBase: Long, statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
       meta: Map[String, String] = Map.empty): Long = {
-    val cols = partitionCols(partSpec)
-    cols.foreach { c =>
-      require(df.schema.fieldNames.contains(c),
-        s"partition column $c absent from the batch schema")
-    }
-    val spark = df.sparkSession
     val dataRel = writeSnapshot(df, root, statsCols,
       partitionBy = Some(partSpec), bloomCols = bloomCols)
-    publishDynamicOverwrite(spark, root, dataRel, cols, expectedBase, meta)
-  }
-
-  /** Shared OCC publish: stage `body`, rename to `expectedBase + 1`
-    * only if the table is still at `expectedBase`; loud CME on loss. */
-  private def casPublish(spark: SparkSession, root: String,
-      expectedBase: Long, tag: String, body: String): Long = {
-    val f = fs(spark, root)
-    val cur = committedVersions(f, root).foldLeft(0L)(math.max)
-    if (cur != expectedBase)
-      throw new java.util.ConcurrentModificationException(
-        s"table at $root moved to version $cur while this writer " +
-          s"computed from $expectedBase; re-read and recompute")
-    val tmp = stageManifest(f, root, tag, body)
-    val target = new Path(s"$root/_commits/${expectedBase + 1}")
-    val occLost = publishLock(root).synchronized {
-      f.exists(target) || !f.rename(tmp, target) || !stampPublish(f, target)
-    }
-    if (occLost) {
-      f.delete(tmp, false)
-      throw new java.util.ConcurrentModificationException(
-        s"version ${expectedBase + 1} at $root was taken concurrently; " +
-          "re-read and recompute")
-    }
-    expectedBase + 1
+    publishDynamicOverwrite(df.sparkSession, root, dataRel,
+      partitionCols(partSpec), expectedBase, meta)
   }
 
   /** TABLE-LEVEL properties (r12): one small `_props` file at the table
@@ -829,24 +893,8 @@ object Txn {
   private[graft] def publishDirAppend(spark: SparkSession, root: String,
       dataRel: String, meta: Map[String, String] = Map.empty): Long = {
     val f = fs(spark, root)
-    f.mkdirs(new Path(s"$root/_commits"))
-    var attempt = 0
-    while (true) {
-      val base = committedVersions(f, root).foldLeft(0L)(math.max)
-      require(base >= 1, s"append to uninitialized table at $root — commit first")
-      val dirs = manifestDirs(f, root, base) :+ dataRel
-      val tmp = stageManifest(f, root,
-        s"${dataRel.stripPrefix("data/")}-$attempt",
-        manifestBody(dirs.mkString(","), meta))
-      val target = new Path(s"$root/_commits/${base + 1}")
-      val won = publishLock(root).synchronized {
-        !f.exists(target) && f.rename(tmp, target) && stampPublish(f, target)
-      }
-      if (won) return base + 1
-      f.delete(tmp, false)
-      attempt += 1
-    }
-    -1L // unreachable
+    publish(f, root, None, "append")(
+      b => Some(extendedBody(f, root, b, Seq(dataRel), meta))).get
   }
 
   /** APPEND commit (r9): publish `df` as new data ADDED to the current
@@ -868,13 +916,19 @@ object Txn {
     * rewrite, which is the correct Delta semantics for blind appends.)
     *
     * Schema: the appended shard may add nullable columns; readers see
-    * them null-filled on older rows via mergeSchema ([[readVersion]]). */
+    * them null-filled on older rows via mergeSchema ([[readVersion]]).
+    *
+    * `partitionBy` writes the shard hive-partitioned: one day's (or
+    * tenant's) data lands as `<partCol>=<value>` subdirs of a fresh
+    * manifest-appended dir — O(shard) commit into a partitioned table
+    * of any size, the production ingest loop. */
   def commitAppend(df: DataFrame, root: String, statsCols: Seq[String] = Nil,
       meta: Map[String, String] = Map.empty,
-      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 20): Long =
+      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 20,
+      partitionBy: Option[String] = None): Long =
     appendCore(df, root, statsCols, meta, dedupKey = None,
-      bloomCols = bloomCols, bloomBits = bloomBits)
-      .getOrElse(sys.error("unreachable: dedup-free append cannot no-op"))
+      partitionBy = partitionBy, bloomCols = bloomCols,
+      bloomBits = bloomBits).get
 
   /** The rebase loop shared by [[commitAppend]] and [[appendIdempotent]].
     * Per-iteration order is RESOLVE tip → CHECK dedup marker → RENAME
@@ -896,9 +950,7 @@ object Txn {
     upsertKey.foreach { k =>
       require(df.schema.fieldNames.contains(k),
         s"upsert key column $k absent from the batch schema")
-      require(!k.contains(',') && !k.contains('\n') && !k.contains('@') &&
-        !k.contains('+'),
-        s"upsert key column must be free of ',', '@', '+' and newlines: $k")
+      keySpec(Seq(k))
     }
     lazy val written: String = // data written once, on first need
       writeSnapshot(df, root, statsCols, partitionBy, bloomCols, bloomBits)
@@ -911,83 +963,77 @@ object Txn {
       writeSnapshot(
         readDir(spark, f, s"$root/$written").select(upsertKey.get).distinct(),
         root, Nil)
-    f.mkdirs(new Path(s"$root/_commits"))
-    var attempt = 0
-    while (true) {
-      val base = committedVersions(f, root).foldLeft(0L)(math.max)
+    publish(f, root, None, "append") { base =>
       require(base >= 1, s"append to uninitialized table at $root — commit first")
       val replayed = dedupKey.exists { case (app, bid) =>
         history(spark, root).exists { case (_, _, m) =>
           m.get("txnAppId").contains(app) && m.get("txnVersion").contains(bid) }
       }
-      if (replayed) return None
-      // SCHEMA ENFORCEMENT at write time (r10, Delta's contract): a
-      // shard may ADD nullable columns (mergeSchema null-fills older
-      // rows) but a shared column changing TYPE would poison the table
-      // — every subsequent read of the version chain fails, long after
-      // the writer is gone. Reject it HERE, where the writer can fix
-      // it, not at read time. Cost: one tip schema resolve per attempt
-      // (footer sampling, O(dirs) small reads) — the same cost class
-      // as the history scan appendIdempotent already pays per batch.
-      // Hive-PARTITION columns are exempt: their
-      // read-side type is INFERRED from directory names (int for
-      // numeric values), not declared by the data, so comparing it to
-      // the shard's declared type is a false mismatch by construction.
-      // Name comparison follows the analyzer's resolution: when
-      // spark.sql.caseSensitive is false (the default) the guard keys
-      // on lowercased names, otherwise a shard declaring `ID string`
-      // against a base `id long` would BYPASS the type check and poison
-      // read-time unionByName anyway (r10 advice).
-      val caseSensitive =
-        spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-      def resolvedName(n: String): String =
-        if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
-      val partCols: Set[String] = (manifestDirs(f, root, base)
-        .map(parseEntry).collect { case (dir, None) => resolveDir(root, dir) }
-        .filter(isPartitionedDir(f, _))
-        // every LEVEL's column names (r13: nested a=v/b=w chains)
-        .flatMap(d => partitionLeafDirs(f, d).flatMap(_._2.map(_._1)))
-        .toSet ++ partitionBy.toSeq.flatMap(partitionCols)).map(resolvedName)
-      val baseFields = readVersion(spark, root, base).schema.fields
-        .map(fld => resolvedName(fld.name) -> fld.dataType).toMap
-      df.schema.fields
-        .filterNot(fld => partCols.contains(resolvedName(fld.name)))
-        .foreach { fld =>
-          baseFields.get(resolvedName(fld.name)).foreach { t =>
-            // nullability-insensitive: a shard tightening (or loosening)
-            // nullability is not a type change — every read path unions
-            // schemas as nullable anyway (r11; strict equality rejected
-            // `array<long> not-null` into `array<long>`). Same-chain
-            // WIDENING shards are accepted (r13, ALTER COLUMN TYPE):
-            // lossless either direction — readVersion union-coerces
-            // mixed chains to the wider member, so they cannot poison
-            // reads the way a string-into-long shard would.
-            require(ignoreNullability(t) == ignoreNullability(fld.dataType)
-              || sameWideningChain(ignoreNullability(t),
-                ignoreNullability(fld.dataType)),
-              s"appended shard changes column ${fld.name} from $t to " +
-                s"${fld.dataType} at $root — a type change needs a full " +
-                "rewrite commit, not an append")
-          }
-        }
-      val dataRel = written
-      // an upsert's manifest extension is tombstone-then-data: the keys
-      // delete every prior copy, the fresh dir re-inserts the new rows —
-      // ONE atomic publish, so no reader ever sees the delete without
-      // the insert
-      val dirs = manifestDirs(f, root, base) ++
-        upsertKey.map(k => s"~$keysWritten@$k").toSeq :+ dataRel
-      val tmp = stageManifest(f, root, s"${dataRel.stripPrefix("data/")}-$attempt",
-        manifestBody(dirs.mkString(","), meta))
-      val target = new Path(s"$root/_commits/${base + 1}")
-      val won = publishLock(root).synchronized {
-        !f.exists(target) && f.rename(tmp, target) && stampPublish(f, target)
+      if (replayed) None
+      else {
+        requireAppendable(df, f, root, base, partitionBy)
+        // an upsert's manifest extension is tombstone-then-data: the keys
+        // delete every prior copy, the fresh dir re-inserts the new rows —
+        // ONE atomic publish, so no reader ever sees the delete without
+        // the insert
+        Some(extendedBody(f, root, base,
+          upsertKey.map(k => s"~$keysWritten@$k").toSeq :+ written,
+          meta ++ partitionBy.map("partitionCol" -> _)))
       }
-      if (won) return Some(base + 1)
-      f.delete(tmp, false) // staged manifest of the lost round
-      attempt += 1 // racer took the slot: rebase onto the new tip
     }
-    None // unreachable
+  }
+
+  /** SCHEMA ENFORCEMENT at write time (r10, Delta's contract): a shard
+    * may ADD nullable columns (mergeSchema null-fills older rows) but a
+    * shared column changing TYPE would poison the table — every
+    * subsequent read of the version chain fails, long after the writer
+    * is gone. Reject it HERE, where the writer can fix it, not at read
+    * time. Cost: one tip schema resolve per attempt (footer sampling,
+    * O(dirs) small reads) — the same cost class as the history scan
+    * appendIdempotent already pays per batch. Hive-PARTITION columns are
+    * exempt: their read-side type is INFERRED from directory names (int
+    * for numeric values), not declared by the data, so comparing it to
+    * the shard's declared type is a false mismatch by construction.
+    * Name comparison follows the analyzer's resolution: when
+    * spark.sql.caseSensitive is false (the default) the guard keys on
+    * lowercased names, otherwise a shard declaring `ID string` against a
+    * base `id long` would BYPASS the type check and poison read-time
+    * unionByName anyway (r10 advice). */
+  private def requireAppendable(df: DataFrame, f: FileSystem, root: String,
+      base: Long, partitionBy: Option[String]): Unit = {
+    val spark = df.sparkSession
+    val caseSensitive =
+      spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
+    def resolvedName(n: String): String =
+      if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
+    val partCols: Set[String] = (manifestDirs(f, root, base)
+      .map(parseEntry).collect { case (dir, None) => resolveDir(root, dir) }
+      .filter(isPartitionedDir(f, _))
+      // every LEVEL's column names (r13: nested a=v/b=w chains)
+      .flatMap(d => partitionLeafDirs(f, d).flatMap(_._2.map(_._1)))
+      .toSet ++ partitionBy.toSeq.flatMap(partitionCols)).map(resolvedName)
+    val baseFields = readVersion(spark, root, base).schema.fields
+      .map(fld => resolvedName(fld.name) -> fld.dataType).toMap
+    df.schema.fields
+      .filterNot(fld => partCols.contains(resolvedName(fld.name)))
+      .foreach { fld =>
+        baseFields.get(resolvedName(fld.name)).foreach { t =>
+          // nullability-insensitive: a shard tightening (or loosening)
+          // nullability is not a type change — every read path unions
+          // schemas as nullable anyway (r11; strict equality rejected
+          // `array<long> not-null` into `array<long>`). Same-chain
+          // WIDENING shards are accepted (r13, ALTER COLUMN TYPE):
+          // lossless either direction — readVersion union-coerces
+          // mixed chains to the wider member, so they cannot poison
+          // reads the way a string-into-long shard would.
+          require(ignoreNullability(t) == ignoreNullability(fld.dataType)
+            || sameWideningChain(ignoreNullability(t),
+              ignoreNullability(fld.dataType)),
+            s"appended shard changes column ${fld.name} from $t to " +
+              s"${fld.dataType} at $root — a type change needs a full " +
+              "rewrite commit, not an append")
+        }
+      }
   }
 
   /** ROW-LEVEL DELETE without rewriting the table (r9): commit the
@@ -1003,58 +1049,24 @@ object Txn {
     * prunes by stats first, then folds the tombstone anti-joins over
     * the pruned scan (r10 — the deletion-vector read shape).
     * The CDC slow path handles tombstone steps (the
-    * file-level fast path is gated to pure data-dir extensions). */
-  def commitDelete(spark: SparkSession, root: String, keyCol: String,
-      keys: DataFrame, meta: Map[String, String] = Map.empty): Long =
-    commitDeleteComposite(spark, root, Seq(keyCol), keys, meta)
-
-  /** COMPOSITE-KEY tombstone delete (r12, r11 verdict item 6): delete
-    * every row whose `(keyCols...)` TUPLE appears in `keys` — the
-    * manifest entry is `~data/<uuid>@a+b`, readers anti-join on all key
-    * columns in log order. `DELETE FROM t WHERE a = 1 AND b = 2` is one
-    * single-row composite tombstone: O(keys), never a rewrite, where
-    * r11 silently downgraded to a full-table copy-on-write. Same
-    * economics, concurrency (rebase loop), and compaction story as the
-    * single-column form — which is now just the 1-column case. */
-  def commitDeleteComposite(spark: SparkSession, root: String,
-      keyCols: Seq[String], keys: DataFrame,
-      meta: Map[String, String] = Map.empty): Long = {
-    require(keyCols.nonEmpty, "composite tombstone needs at least one column")
-    require(keyCols.distinct == keyCols,
-      s"composite tombstone columns must be distinct: $keyCols")
+    * file-level fast path is gated to pure data-dir extensions).
+    *
+    * Several `keyCols` form a COMPOSITE key (r12, r11 verdict item 6):
+    * the entry is `~data/<uuid>@a+b` and readers anti-join on the whole
+    * tuple, so `DELETE FROM t WHERE a = 1 AND b = 2` is one single-row
+    * tombstone — O(keys), never a full-table copy-on-write. */
+  def commitDelete(spark: SparkSession, root: String, keyCols: Seq[String],
+      keys: DataFrame, meta: Map[String, String] = Map.empty): Long = {
+    val spec = keySpec(keyCols)
     keyCols.foreach { c =>
       require(keys.schema.fieldNames.contains(c),
         s"keys frame must carry the key column $c")
-      // the tombstone entry is parsed as `~<dir>@<a+b>` inside a
-      // comma-separated manifest line — a metacharacter in a column
-      // name would corrupt the manifest for every future reader (r10
-      // advice; '+' joined the reserved set with composite keys)
-      require(!c.contains(',') && !c.contains('\n') && !c.contains('@') &&
-        !c.contains('+'),
-        s"tombstone key column must be free of ',', '@', '+' and newlines: $c")
     }
-    val keySpec = keyCols.mkString("+")
     val f = fs(spark, root)
     val dataRel = writeSnapshot(
       keys.select(keyCols.map(col): _*).distinct(), root, Nil)
-    f.mkdirs(new Path(s"$root/_commits"))
-    var attempt = 0
-    while (true) {
-      val base = committedVersions(f, root).foldLeft(0L)(math.max)
-      require(base >= 1, s"delete from uninitialized table at $root")
-      val dirs = manifestDirs(f, root, base) :+ s"~$dataRel@$keySpec"
-      val tmp = stageManifest(f, root,
-        s"${dataRel.stripPrefix("data/")}-$attempt",
-        manifestBody(dirs.mkString(","), meta))
-      val target = new Path(s"$root/_commits/${base + 1}")
-      val won = publishLock(root).synchronized {
-        !f.exists(target) && f.rename(tmp, target) && stampPublish(f, target)
-      }
-      if (won) return base + 1
-      f.delete(tmp, false)
-      attempt += 1
-    }
-    -1L // unreachable
+    publish(f, root, None, "delete")(
+      b => Some(extendedBody(f, root, b, Seq(s"~$dataRel@$spec"), meta))).get
   }
 
   /** IDEMPOTENT streaming append (r9): the exactly-once foreachBatch
@@ -1085,8 +1097,7 @@ object Txn {
       bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 20,
       partitionBy: Option[String] = None): Option[Long] =
     appendCore(df, root, statsCols,
-      meta = Map("txnAppId" -> appId, "txnVersion" -> batchId.toString) ++
-        partitionBy.map("partitionCol" -> _),
+      meta = Map("txnAppId" -> appId, "txnVersion" -> batchId.toString),
       dedupKey = Some((appId, batchId.toString)),
       partitionBy = partitionBy,
       bloomCols = bloomCols, bloomBits = bloomBits)
@@ -1154,20 +1165,7 @@ object Txn {
     val dirs = manifestDirs(f, root, toVersion)
     val body = manifestBody(dirs.mkString(","),
       meta + ("restoredFrom" -> toVersion.toString))
-    f.mkdirs(new Path(s"$root/_commits"))
-    var attempt = 0
-    while (true) {
-      val base = committedVersions(f, root).foldLeft(0L)(math.max)
-      val tmp = stageManifest(f, root, s"restore-$toVersion-$attempt", body)
-      val target = new Path(s"$root/_commits/${base + 1}")
-      val won = publishLock(root).synchronized {
-        !f.exists(target) && f.rename(tmp, target) && stampPublish(f, target)
-      }
-      if (won) return base + 1
-      f.delete(tmp, false)
-      attempt += 1
-    }
-    -1L // unreachable
+    publish(f, root, None, "restore")(_ => Some(body)).get
   }
 
   /** METADATA-ONLY commit (r13, the column-mapping carrier): publish
@@ -1180,22 +1178,8 @@ object Txn {
   def commitMetaOnly(spark: SparkSession, root: String,
       meta: Map[String, String]): Long = {
     val f = fs(spark, root)
-    var attempt = 0
-    while (true) {
-      val base = committedVersions(f, root).foldLeft(0L)(math.max)
-      require(base >= 1, s"metadata commit on uninitialized table at $root")
-      val dirs = manifestDirs(f, root, base)
-      val tmp = stageManifest(f, root, s"meta-$base-$attempt",
-        manifestBody(dirs.mkString(","), meta))
-      val target = new Path(s"$root/_commits/${base + 1}")
-      val won = publishLock(root).synchronized {
-        !f.exists(target) && f.rename(tmp, target) && stampPublish(f, target)
-      }
-      if (won) return base + 1
-      f.delete(tmp, false)
-      attempt += 1
-    }
-    -1L // unreachable
+    publish(f, root, None, "meta")(
+      b => Some(extendedBody(f, root, b, Nil, meta))).get
   }
 
   /** Zero-copy SHALLOW CLONE (r10): initialize `dstRoot` as version 1
@@ -1230,60 +1214,7 @@ object Txn {
     }
     val body = manifestBody(absEntries.mkString(","),
       meta + ("clonedFrom" -> s"$srcRoot#$srcV"))
-    val tmp = stageManifest(f, dstRoot, "clone-v1", body)
-    val target = new Path(s"$dstRoot/_commits/1")
-    val cloneWon = publishLock(dstRoot).synchronized {
-      !f.exists(target) && f.rename(tmp, target) && stampPublish(f, target)
-    }
-    if (!cloneWon) {
-      f.delete(tmp, false)
-      sys.error(s"clone target $dstRoot was initialized concurrently")
-    }
-    1L
-  }
-
-  /** HIVE-PARTITIONED commit (r10): the snapshot dir is laid out as
-    * `data/<uuid>/<partCol>=<value>/part-*.parquet` — the standard
-    * warehouse idiom for time/tenant-keyed 100 TB corpora. The
-    * partition column materializes from the directory names on read
-    * (one column of storage saved per row), and partition-level
-    * skipping ([[readPartitionPruned]]) needs no sidecar at all: the
-    * directory listing IS the index. Layout is self-describing
-    * (readers detect `col=` children), so deletes, upserts, restores,
-    * clones and CDC all compose with partitioned snapshots unchanged.
-    * Pair with [[commitAppendPartitioned]] for the canonical
-    * ingest-one-day-at-a-time loop. */
-  def commitPartitioned(df: DataFrame, root: String, partCol: String,
-      meta: Map[String, String] = Map.empty,
-      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-      bloomBits: Int = 1 << 20): Long = {
-    partitionCols(partCol).foreach { c =>
-      require(df.schema.fieldNames.contains(c),
-        s"partition column $c absent from the schema")
-    }
-    val f = fs(df.sparkSession, root)
-    val dataRel = writeSnapshot(df, root, statsCols,
-      partitionBy = Some(partCol), bloomCols = bloomCols, bloomBits = bloomBits)
-    publishFull(f, root, dataRel,
-      manifestBody(dataRel, meta + ("partitionCol" -> partCol)))
-  }
-
-  /** [[commitAppend]] writing the shard hive-partitioned: one day's (or
-    * tenant's) data lands as `<partCol>=<value>` subdirs of a fresh
-    * manifest-appended dir — O(shard) commit into a partitioned table
-    * of any size, the production ingest loop. */
-  def commitAppendPartitioned(df: DataFrame, root: String, partCol: String,
-      meta: Map[String, String] = Map.empty,
-      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-      bloomBits: Int = 1 << 20): Long = {
-    partitionCols(partCol).foreach { c =>
-      require(df.schema.fieldNames.contains(c),
-        s"partition column $c absent from the shard schema")
-    }
-    appendCore(df, root, statsCols, meta + ("partitionCol" -> partCol),
-      dedupKey = None, partitionBy = Some(partCol),
-      bloomCols = bloomCols, bloomBits = bloomBits)
-      .getOrElse(sys.error("unreachable: dedup-free append cannot no-op"))
+    publish(f, dstRoot, Some(0L), "clone")(_ => Some(body)).get
   }
 
   /** PARTITION-PRUNED read `partCol IN (values)` on the current
@@ -1343,56 +1274,6 @@ object Txn {
       case _ => ()
     }
     (kept, total)
-  }
-
-  /** OPTIMISTIC-CONCURRENCY commit: publish `df` as the next version
-    * only if the table is still at `expectedBase` (the version this
-    * writer read before computing). A full-snapshot rewrite computed
-    * from version B silently DISCARDS any version committed between B
-    * and the publish — [[commit]]'s CAS only serializes version
-    * numbers, it cannot know the rewrite is stale. This is the
-    * serializable-writer check Delta calls conflict detection, reduced
-    * to whole-snapshot granularity: losers throw
-    * [[java.util.ConcurrentModificationException]] and must re-read +
-    * recompute (their orphan snapshot is vacuum fodder, never visible).
-    * The check runs AFTER the data write — the publish rename is the
-    * linearization point, and a racer that lands between check and
-    * rename is caught because rename-without-overwrite fails on the
-    * taken version number and we re-check instead of retrying blindly. */
-  def commitIf(df: DataFrame, root: String, expectedBase: Long,
-      statsCols: Seq[String] = Nil, meta: Map[String, String] = Map.empty,
-      partitionBy: Option[String] = None,
-      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 20): Long = {
-    val spark = df.sparkSession
-    val f = fs(spark, root)
-    def check(): Unit = {
-      val cur = committedVersions(f, root).foldLeft(0L)(math.max)
-      if (cur != expectedBase)
-        throw new java.util.ConcurrentModificationException(
-          s"table at $root moved to version $cur while this writer " +
-            s"computed from $expectedBase; re-read and recompute")
-    }
-    check()
-    val dataRel = writeSnapshot(df, root, statsCols, partitionBy,
-      bloomCols, bloomBits)
-    val tmp = stageManifest(f, root, dataRel.stripPrefix("data/"),
-      manifestBody(dataRel, meta))
-    try check()
-    catch { case t: Throwable => f.delete(tmp, false); throw t }
-    val target = new Path(s"$root/_commits/${expectedBase + 1}")
-    val occLost = publishLock(root).synchronized {
-      f.exists(target) || !f.rename(tmp, target)
-    }
-    if (occLost) {
-      // a racer published expectedBase+1 between the re-check and the
-      // rename; the rename-without-overwrite failure IS the detection
-      // (staged manifest cleaned; the orphan snapshot is vacuum fodder)
-      f.delete(tmp, false)
-      throw new java.util.ConcurrentModificationException(
-        s"version ${expectedBase + 1} at $root was taken concurrently; " +
-          "re-read and recompute")
-    }
-    expectedBase + 1
   }
 
   /** ONE aggregation pass computing EVERY declared sidecar of a fresh
@@ -1637,10 +1518,13 @@ object Txn {
     * cast('long')). Pre-r13 string "blooms" were cast-based: fully
     * non-numeric columns produced NO sidecar rows (always kept, safe);
     * a mixed numeric-string column's old sidecar would mislead the
-    * hashing reader — re-commit or compact such tables to refresh. */
+    * hashing reader — re-commit or compact such tables to refresh.
+    * NULL strings feed null, not a hash: xxhash64 of NULL is the seed
+    * (42), which would set bits for a value no probe can ask for and
+    * write a bloom line for an all-null (file, col) cell. */
   private def bloomFeed(snap: DataFrame, c: String): org.apache.spark.sql.Column =
     if (snap.schema(c).dataType == org.apache.spark.sql.types.StringType)
-      xxhash64(col(c))
+      when(col(c).isNotNull, xxhash64(col(c)))
     else numFeed(snap, c)
 
   /** (file-key, col) -> bloom bit array, merged from every snapshot
@@ -1666,52 +1550,6 @@ object Txn {
             }
         }
       }.toMap
-  }
-
-  /** [[commit]] that also writes BLOOM sidecars: full-snapshot publish
-    * with `_stats.tsv` for `statsCols` (range skipping) and
-    * `_bloom.tsv` for `bloomCols` (point skipping via [[readPoint]]).
-    * Sidecars cost one extra scan of the fresh snapshot each and are
-    * invisible to plain parquet readers. */
-  def commitIndexed(df: DataFrame, root: String, statsCols: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 20,
-      meta: Map[String, String] = Map.empty): Long = {
-    require(bloomBits % 64 == 0 && bloomBits > 0,
-      s"bloomBits must be a positive multiple of 64, got $bloomBits")
-    val spark = df.sparkSession
-    val f = fs(spark, root)
-    val dataRel = writeSnapshot(df, root, statsCols,
-      bloomCols = bloomCols, bloomBits = bloomBits)
-    publishFull(f, root, dataRel, manifestBody(dataRel, meta))
-  }
-
-  /** CHECK-constrained commit (r10, Delta's table constraints): every
-    * expression in `checks` must hold on EVERY row or nothing is
-    * published — the snapshot is validated AS WRITTEN (read back from
-    * the fresh dir, so what's checked is exactly what readers would
-    * see) before the manifest rename, and a violation fails loud with
-    * a sample of offending rows while the table stays at its previous
-    * version (the orphan snapshot is vacuum fodder, never visible).
-    * Validation costs one scan of the new snapshot — same bill as a
-    * stats sidecar — and runs distributed (a count + limited sample,
-    * no collect of the data). NOT NULL is just `col IS NOT NULL` as a
-    * check. */
-  def commitChecked(df: DataFrame, root: String, checks: Seq[String],
-      statsCols: Seq[String] = Nil, meta: Map[String, String] = Map.empty): Long = {
-    require(checks.nonEmpty, "commitChecked needs at least one check")
-    val spark = df.sparkSession
-    val f = fs(spark, root)
-    val dataRel = writeSnapshot(df, root, statsCols)
-    val snap = spark.read.parquet(s"$root/$dataRel")
-    checks.foreach { c =>
-      val bad = snap.where(!expr(c))
-      val sample = bad.limit(3).collect()
-      if (sample.nonEmpty)
-        throw new IllegalStateException(
-          s"constraint violated, commit aborted (table unchanged): CHECK ($c) " +
-            s"fails on rows like ${sample.mkString("; ").take(500)}")
-    }
-    publishFull(f, root, dataRel, manifestBody(dataRel, meta))
   }
 
   /** Per-manifest-entry pruning decision for version `version`: each
@@ -2470,7 +2308,7 @@ object Txn {
     *   - `spark.graft.txn.maintain.maxTombstones` (default 8)
     *   - `spark.graft.txn.maintain.targetBytes`   (default 128 MiB)
     *
-    * CONCURRENCY: the compaction publishes through [[commitIf]] pinned
+    * CONCURRENCY: the compaction publishes through [[commit]] pinned
     * to the version the gauge read — a maintenance job must NEVER
     * clobber a writer that landed mid-rewrite (a full-snapshot commit
     * from a stale base silently discards the racer's rows). A lost
@@ -2482,11 +2320,10 @@ object Txn {
     * OCC publish lost. */
   def maintain(spark: SparkSession, root: String,
       statsCols: Seq[String] = Nil): Option[Long] = {
-    def confLong(k: String, d: Long): Long =
-      spark.conf.getOption(k).map(_.toLong).getOrElse(d)
-    val maxFiles = confLong("spark.graft.txn.maintain.maxFiles", 64L)
-    val maxTombs = confLong("spark.graft.txn.maintain.maxTombstones", 8L)
-    val targetBytes = confLong("spark.graft.txn.maintain.targetBytes", 128L << 20)
+    val maxFiles = Q.confLong(spark, "spark.graft.txn.maintain.maxFiles", 64L)
+    val maxTombs = Q.confLong(spark, "spark.graft.txn.maintain.maxTombstones", 8L)
+    val targetBytes =
+      Q.confLong(spark, "spark.graft.txn.maintain.targetBytes", 128L << 20)
     require(maxFiles > 0 && maxTombs >= 0 && targetBytes > 0,
       s"maintain thresholds must be positive ($maxFiles, $maxTombs, $targetBytes)")
     val base = currentVersion(spark, root).getOrElse(
@@ -2515,13 +2352,11 @@ object Txn {
         case Some(c) => folded.repartition(partitionCols(c).map(col): _*)
         case None    => folded.repartition(nFiles.toInt)
       }
-      try Some(commitIf(laid, root, expectedBase = base,
-        statsCols = statsCols,
+      try Some(commit(laid, root, statsCols = statsCols,
         meta = Map("op" -> "maintain",
           "compactedFiles" -> files.toString,
-          "collapsedTombstones" -> tombs.toString) ++
-          partCol.map("partitionCol" -> _),
-        partitionBy = partCol))
+          "collapsedTombstones" -> tombs.toString),
+        partitionBy = partCol, expectedBase = Some(base)))
       catch {
         case _: java.util.ConcurrentModificationException => None
       }
@@ -2554,7 +2389,7 @@ object Txn {
       if (st.isFile && st.getPath.getName.endsWith(".parquet")) total += st.getLen
     }
     val nFiles = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-    val v = commitIndexed(spark.read.parquet(inDir).repartition(nFiles),
+    val v = commit(spark.read.parquet(inDir).repartition(nFiles),
       root, statsCols = statsCols, bloomCols = bloomCols,
       bloomBits = bloomBits)
     val dataDir = s"$root/${manifestTarget(fs(spark, root), root, v)}"

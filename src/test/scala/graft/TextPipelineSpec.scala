@@ -63,6 +63,17 @@ class TextPipelineSpec extends SparkSpec {
     assert(ops.Q.spreadScan(stream, col("value")) eq stream)
   }
 
+  test("spreadScan: a malformed target-bytes conf fails naming the key") {
+    val docs = Tables.documents(spark, dir).select("doc_id", "text")
+    val key = "spark.graft.spread.targetBytesPerTask"
+    spark.conf.set(key, "48k")
+    try {
+      val err = intercept[IllegalArgumentException](
+        ops.Q.spreadScan(docs, col("doc_id")))
+      assert(err.getMessage.contains(key), err.getMessage)
+    } finally spark.conf.unset(key)
+  }
+
   test("doc chunks reassemble to the original document") {
     // stride 32, width 40: dropping the 8-token overlap from every
     // chunk after the first and concatenating must rebuild the doc.

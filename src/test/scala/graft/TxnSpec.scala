@@ -9,6 +9,46 @@ import graft.ops.Txn
   * TypeTag (the StreamingSpec NdDoc rule). */
 case class CdcRow(change_op: String, grp: String, v: Long)
 
+/** A local filesystem under the `racefs` scheme whose `exists` probe of
+  * one armed path first runs a racer — a deterministic "another writer
+  * published version n just before our rename" injection: the publish
+  * loop checks `exists(_commits/<n>)` under its lock right before the
+  * rename, so the racer's commit lands in exactly the window a real
+  * concurrent writer would. */
+class RaceFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.FileStatus
+  override def getUri: java.net.URI = RaceFs.uri
+  override def exists(p: Path): Boolean = {
+    RaceFs.fire(p.toUri.getPath)
+    super.exists(p)
+  }
+  // the local status loads its permissions lazily through a `file:`
+  // URI of its own path — load them eagerly under that scheme
+  override def getFileStatus(p: Path): FileStatus =
+    withPermissions(super.getFileStatus(p))
+  override def listStatus(p: Path): Array[FileStatus] =
+    super.listStatus(p).map(withPermissions)
+  private def withPermissions(st: FileStatus): FileStatus = {
+    val q = st.getPath
+    st.setPath(new Path("file", null, q.toUri.getPath))
+    st.getPermission
+    st.setPath(q)
+    st
+  }
+}
+
+object RaceFs {
+  val uri: java.net.URI = java.net.URI.create("racefs:///")
+  @volatile private var armed: Option[(String, () => Unit)] = None
+  /** Run `racer` once, the first time `path` (scheme-less) is probed. */
+  def arm(path: String)(racer: => Unit): Unit = armed = Some((path, () => racer))
+  def fired: Boolean = armed.isEmpty
+  private def fire(path: String): Unit = armed match {
+    case Some((p, racer)) if p == path => armed = None; racer()
+    case _ => ()
+  }
+}
+
 /** The transactional-table contract (ops/Txn.scala): atomic pointer-swap
   * commits, torn-writer invisibility (the r8 verdict's "a failed rewrite
   * of a compacted or merged table is not atomic" gap), time travel,
@@ -137,12 +177,12 @@ class TxnSpec extends SparkSpec {
     // writer A reads at v1 and starts computing; writer B lands v2 first
     Txn.commit((6L to 9L).toDF("id"), root) // v2
     intercept[java.util.ConcurrentModificationException] {
-      Txn.commitIf((100L to 105L).toDF("id"), root, expectedBase = 1L)
+      Txn.commit((100L to 105L).toDF("id"), root, expectedBase = Some(1L))
     }
     // loser's orphan snapshot never became visible
     assert(ids(Txn.read(spark, root)) == (6L to 9L).toSet)
     // after re-reading at v2, the recomputed rewrite lands as v3
-    val v3 = Txn.commitIf((200L to 202L).toDF("id"), root, expectedBase = 2L)
+    val v3 = Txn.commit((200L to 202L).toDF("id"), root, expectedBase = Some(2L))
     assert(v3 == 3L)
     assert(ids(Txn.read(spark, root)) == (200L to 202L).toSet)
   }
@@ -204,7 +244,7 @@ class TxnSpec extends SparkSpec {
     Txn.commit((1L to 3L).toDF("id"), root,
       meta = Map("op" -> "bootstrap", "job" -> "ingest-42"))
     Txn.commit((4L to 6L).toDF("id"), root) // metadata-free (the v1 format)
-    Txn.commitIf((7L to 9L).toDF("id"), root, expectedBase = 2L,
+    Txn.commit((7L to 9L).toDF("id"), root, expectedBase = Some(2L),
       meta = Map("op" -> "compact"))
     val h = Txn.history(spark, root)
     assert(h.map(_._1) == Seq(1L, 2L, 3L))
@@ -452,7 +492,7 @@ class TxnSpec extends SparkSpec {
     import spark.implicits._
     val root = freshRoot("del")
     Txn.commit((1L to 10L).toDF("id"), root)                      // v1
-    Txn.commitDelete(spark, root, "id", Seq(3L, 7L, 99L).toDF("id"), // v2
+    Txn.commitDelete(spark, root, Seq("id"), Seq(3L, 7L, 99L).toDF("id"), // v2
       meta = Map("op" -> "gdpr-erasure"))
     assert(ids(Txn.read(spark, root)) == ((1L to 10L).toSet -- Set(3L, 7L)))
     // v1 time travel unaffected by the tombstone
@@ -471,7 +511,7 @@ class TxnSpec extends SparkSpec {
     Txn.commit(spark.range(0, 8000).toDF("id")
       .repartitionByRange(8, col("id")).sortWithinPartitions("id"),
       root, statsCols = Seq("id"))
-    Txn.commitDelete(spark, root, "id", Seq(5L, 4000L).toDF("id"))
+    Txn.commitDelete(spark, root, Seq("id"), Seq(5L, 4000L).toDF("id"))
     val (keptT, totalT) = Txn.pruneFiles(spark, root, "id", 0L, 10L)
     assert(keptT.size < totalT,
       s"tombstoned version must still prune: kept ${keptT.size} of $totalT")
@@ -490,7 +530,7 @@ class TxnSpec extends SparkSpec {
     // vacuum keeps tombstone dirs the retained version references
     val root2 = freshRoot("delvac")
     Txn.commit((1L to 5L).toDF("id"), root2)
-    Txn.commitDelete(spark, root2, "id", Seq(2L).toDF("id"))
+    Txn.commitDelete(spark, root2, Seq("id"), Seq(2L).toDF("id"))
     Txn.vacuum(spark, root2, keepLast = 1, retentionMs = 0L)
     assert(ids(Txn.read(spark, root2)) == Set(1L, 3L, 4L, 5L))
   }
@@ -541,7 +581,7 @@ class TxnSpec extends SparkSpec {
     val root = freshRoot("badkey")
     Txn.commit((1L to 3L).toDF("a,b"), root)
     intercept[IllegalArgumentException] {
-      Txn.commitDelete(spark, root, "a,b", Seq(1L).toDF("a,b"))
+      Txn.commitDelete(spark, root, Seq("a,b"), Seq(1L).toDF("a,b"))
     }
   }
 
@@ -663,7 +703,7 @@ class TxnSpec extends SparkSpec {
       Seq((20L, "app20")).toDF("id", "v"), root))
     val b = new Thread(() => Txn.commitUpsert(
       Seq((5L, "ups5")).toDF("id", "v"), root, "id"))
-    val c = new Thread(() => Txn.commitDelete(spark, root, "id",
+    val c = new Thread(() => Txn.commitDelete(spark, root, Seq("id"),
       Seq(9L).toDF("id")))
     a.start(); b.start(); c.start(); a.join(); b.join(); c.join()
     assert(Txn.currentVersion(spark, root).contains(4L))
@@ -738,7 +778,7 @@ class TxnSpec extends SparkSpec {
     val df = (1L to n).map { i =>
       (i / 1000L, (i * 2654435761L) % 1000003L)
     }.toDF("grp", "key")
-    Txn.commitIndexed(
+    Txn.commit(
       df.repartitionByRange(8, col("grp")).sortWithinPartitions("grp"),
       root, statsCols = Seq("key"), bloomCols = Seq("key"),
       bloomBits = 1 << 17)
@@ -777,7 +817,7 @@ class TxnSpec extends SparkSpec {
     import spark.implicits._
     val root = freshRoot("part")
     val df = (1L to 4000L).map(i => (i, i % 8L)).toDF("id", "day")
-    Txn.commitPartitioned(df, root, "day")
+    Txn.commit(df, root, partitionBy = Some("day"))
     // the directory listing IS the index: 1 of 8 partitions opened
     assert(Txn.partitionProbe(spark, root, "day", Seq(3L)) == ((1, 8)))
     assert(ids(Txn.readPartitionPruned(spark, root, "day", Seq(3L))) ==
@@ -785,8 +825,9 @@ class TxnSpec extends SparkSpec {
     // partition column materializes from dir names on a full read
     assert(Txn.read(spark, root).count() == 4000L)
     // O(shard) partitioned append: a new day lands as one more dir
-    Txn.commitAppendPartitioned(
-      (5001L to 5100L).map(i => (i, 9L)).toDF("id", "day"), root, "day")
+    Txn.commitAppend(
+      (5001L to 5100L).map(i => (i, 9L)).toDF("id", "day"), root,
+      partitionBy = Some("day"))
     assert(Txn.partitionProbe(spark, root, "day", Seq(9L)) == ((1, 9)))
     assert(ids(Txn.readPartitionPruned(spark, root, "day", Seq(9L))) ==
       (5001L to 5100L).toSet)
@@ -798,7 +839,7 @@ class TxnSpec extends SparkSpec {
         r.getAs[Number](2).longValue())) // partition col type is inferred
     assert(ch.length == 100 && ch.forall(c => c._1 == "insert" && c._3 == 9L))
     // tombstone deletes fold over the pruned partition scan
-    Txn.commitDelete(spark, root, "id", Seq(3L, 11L, 5001L).toDF("id"))
+    Txn.commitDelete(spark, root, Seq("id"), Seq(3L, 11L, 5001L).toDF("id"))
     assert(ids(Txn.readPartitionPruned(spark, root, "day", Seq(3L, 9L))) ==
       ((1L to 4000L).filter(_ % 8 == 3).toSet -- Set(3L, 11L)) ++
         (5002L to 5100L).toSet)
@@ -812,9 +853,9 @@ class TxnSpec extends SparkSpec {
       .toSet == ((1L to 10L).toSet - 3L).map(_ % 8L))
     // STRING partition values (tenant/source-keyed layout) prune too
     val root2 = freshRoot("partstr")
-    Txn.commitPartitioned(
+    Txn.commit(
       Seq((1L, "web"), (2L, "books"), (3L, "web")).toDF("id", "src"),
-      root2, "src")
+      root2, partitionBy = Some("src"))
     assert(Txn.partitionProbe(spark, root2, "src", Seq("web")) == ((1, 2)))
     assert(ids(Txn.readPartitionPruned(spark, root2, "src", Seq("web"))) ==
       Set(1L, 3L))
@@ -832,11 +873,11 @@ class TxnSpec extends SparkSpec {
     Txn.commitAppend(Seq(100L).toDF("id"), root)
     // ...so the pinned publish must fail loud, not clobber the append
     intercept[java.util.ConcurrentModificationException] {
-      Txn.publishDirFullIf(spark, root, rel, expectedBase = 1L)
+      Txn.publishDir(spark, root, rel, expectedBase = Some(1L))
     }
     assert(ids(Txn.read(spark, root)) == (1L to 5L).toSet + 100L)
     // re-pinned at the NEW tip, the replace lands
-    val v = Txn.publishDirFullIf(spark, root, rel, expectedBase = 2L)
+    val v = Txn.publishDir(spark, root, rel, expectedBase = Some(2L))
     assert(v == 3L && ids(Txn.read(spark, root)) == (6L to 9L).toSet)
   }
 
@@ -871,7 +912,7 @@ class TxnSpec extends SparkSpec {
     // INSIDE the real subdir, not a bogus sibling.
     val df = Seq((1L, "a:b"), (2L, "a:b"), (3L, "plain"),
       (4L, null.asInstanceOf[String]), (5L, "a b")).toDF("id", "src")
-    Txn.commitPartitioned(df, root, "src", statsCols = Seq("id"))
+    Txn.commit(df, root, partitionBy = Some("src"), statsCols = Seq("id"))
     // exactly the four real partition dirs exist — no sidecar debris
     val dataDirs = new java.io.File(root, "data").listFiles()
     val subdirs = dataDirs.head.listFiles().filter(_.isDirectory)
@@ -912,7 +953,7 @@ class TxnSpec extends SparkSpec {
     // ranges — the shape where the file rung has something to prune
     val df = (1L to 8000L).map(i => (i, i % 4L)).toDF("id", "year")
       .repartitionByRange(4, col("id"))
-    Txn.commitPartitioned(df, root, "year", statsCols = Seq("id"))
+    Txn.commit(df, root, partitionBy = Some("year"), statsCols = Seq("id"))
     val (dk, dt, fk, fit) =
       Txn.partitionFileProbe(spark, root, "year", Seq(1L), "id", 100L, 300L)
     assert(dk == 1 && dt == 4, s"directory rung: kept $dk of $dt")
@@ -924,7 +965,7 @@ class TxnSpec extends SparkSpec {
     assert(ids(Txn.readPartitionFilePruned(spark, root, "year", Seq(1L),
       "id", 100L, 300L)) == want(base))
     // tombstones fold over the two-rung pruned scan
-    Txn.commitDelete(spark, root, "id", Seq(101L, 205L).toDF("id"))
+    Txn.commitDelete(spark, root, Seq("id"), Seq(101L, 205L).toDF("id"))
     assert(ids(Txn.readPartitionFilePruned(spark, root, "year", Seq(1L),
       "id", 100L, 300L)) == want(base) -- Set(101L, 205L))
     // a FLAT appended shard in the chain skips the directory rung
@@ -940,7 +981,7 @@ class TxnSpec extends SparkSpec {
     val root2 = freshRoot("partbloom")
     val keyed = (1L to 6000L).map(i => (i, (i * 2654435761L) % 100003L, i % 3L))
       .toDF("id", "key", "tenant").repartition(4)
-    Txn.commitPartitioned(keyed, root2, "tenant",
+    Txn.commit(keyed, root2, partitionBy = Some("tenant"),
       bloomCols = Seq("key"), bloomBits = 1 << 17)
     val probe = ((42L * 2654435761L) % 100003L)
     val (bk, bt) = Txn.probeFiles(spark, root2, "key", Seq(probe))
@@ -965,7 +1006,7 @@ class TxnSpec extends SparkSpec {
         val lo = 100L * k + 1L
         Txn.commitAppend((lo to lo + 99L).toDF("id").repartition(4), root)
         expected ++= (lo to lo + 99L)
-        Txn.commitDelete(spark, root, "id", Seq(lo + 1L).toDF("id"))
+        Txn.commitDelete(spark, root, Seq("id"), Seq(lo + 1L).toDF("id"))
         expected -= (lo + 1L)
       }
       val (_, filesBefore, _, tombsBefore) = Txn.tableDetail(spark, root)
@@ -990,10 +1031,10 @@ class TxnSpec extends SparkSpec {
       // compacted snapshot is still col=value dirs (directory pruning
       // survives), the chain is collapsed, content holds
       val proot = freshRoot("maintain_part")
-      Txn.commitPartitioned(
+      Txn.commit(
         (1L to 400L).map(i => (i, i % 4L)).toDF("id", "day")
-          .repartition(8), proot, "day")
-      Txn.commitDelete(spark, proot, "id", Seq(7L).toDF("id"))
+          .repartition(8), proot, partitionBy = Some("day"))
+      Txn.commitDelete(spark, proot, Seq("id"), Seq(7L).toDF("id"))
       val pv = Txn.maintain(spark, proot)
       assert(pv.nonEmpty)
       val (_, _, _, ptombs) = Txn.tableDetail(spark, proot)
@@ -1025,7 +1066,7 @@ class TxnSpec extends SparkSpec {
     assert(ids(Txn.readVersion(spark, root,
       Txn.versionAsOf(spark, root, betweenTs).get)) == (1L to 5L).toSet)
     // detail reflects the tombstone chain a compaction scheduler watches
-    Txn.commitDelete(spark, root, "id", Seq(10L).toDF("id"))
+    Txn.commitDelete(spark, root, Seq("id"), Seq(10L).toDF("id"))
     val (nVer, nFiles, bytes, nTombs) = Txn.tableDetail(spark, root)
     assert(nVer == 3L && nTombs == 1L && nFiles > 0L && bytes > 0L)
   }
@@ -1037,7 +1078,7 @@ class TxnSpec extends SparkSpec {
       (i / 500L, (i * 2654435761L) % 1000003L)
     }.toDF("grp", "key").repartitionByRange(4, col("grp"))
       .sortWithinPartitions("grp")
-    Txn.commitIndexed(shard(1L, 2000L), root,
+    Txn.commit(shard(1L, 2000L), root,
       bloomCols = Seq("key"), bloomBits = 1 << 16)
     // the ingest loop: appended shards carry their own bloom sidecars
     Txn.commitAppend(shard(2001L, 4000L), root,
@@ -1089,19 +1130,181 @@ class TxnSpec extends SparkSpec {
     val root = freshRoot("check")
     val bad = Seq((1L, -5L), (2L, 3L)).toDF("id", "v")
     val err = intercept[IllegalStateException] {
-      Txn.commitChecked(bad, root, Seq("v >= 0"))
+      Txn.commit(bad, root, checks = Seq("v >= 0"))
     }
     assert(err.getMessage.contains("CHECK (v >= 0)"))
     assert(Txn.currentVersion(spark, root).isEmpty) // nothing published
     // SQL CHECK semantics: a NULL comparison is not a violation
     val withNull = Seq((1L, java.lang.Long.valueOf(5L)),
       (2L, null.asInstanceOf[java.lang.Long])).toDF("id", "v")
-    Txn.commitChecked(withNull, root, Seq("v >= 0"))
+    Txn.commit(withNull, root, checks = Seq("v >= 0"))
     assert(Txn.currentVersion(spark, root).contains(1L))
     // NOT NULL is an explicit check when wanted
     intercept[IllegalStateException] {
-      Txn.commitChecked(withNull, root, Seq("v IS NOT NULL"))
+      Txn.commit(withNull, root, checks = Seq("v IS NOT NULL"))
     }
     assert(Txn.currentVersion(spark, root).contains(1L))
+  }
+
+  test("string blooms skip NULLs: an all-null file writes no bloom line, " +
+      "nulls set no bits") {
+    import spark.implicits._
+    val root = freshRoot("bloomnull")
+    // three input slices → three files: f=0 holds only nulls, f=1 "a"
+    // plus a null, f=2 "a" alone
+    val rows = Seq((0, null), (0, null), (1, "a"), (1, null), (2, "a"),
+      (2, "a")).map { case (f, s) => org.apache.spark.sql.Row(f, s) }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      new org.apache.spark.sql.types.StructType()
+        .add("f", "int").add("s", "string"))
+    Txn.commit(df, root, bloomCols = Seq("s"), bloomBits = 1 << 10)
+    val v = Txn.currentVersion(spark, root).get
+    val blooms = Txn.fileBlooms(spark, root, v)
+    val fileOf = Txn.read(spark, root)
+      .select(col("f"), regexp_extract(input_file_name(), "[^/]+$", 0))
+      .distinct().collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+    assert(fileOf.values.toSet.size == 3, s"expected one file per f value: $fileOf")
+    assert(!blooms.contains((fileOf(0), "s")),
+      "an all-null (file, col) cell must write no bloom line")
+    assert(blooms((fileOf(1), "s")).sameElements(blooms((fileOf(2), "s"))),
+      "a null must not set bits beside the value it shares a file with")
+    assert(Txn.readPointString(spark, root, "s", Seq("a")).count() == 3L)
+  }
+
+  /** Runs `op` on a worker thread and returns what it threw, failing the
+    * test if it returned normally or did not finish within 60 s — a
+    * publish loop that spins fails here instead of hanging the suite. */
+  private def failsWithin60s(op: => Any): Throwable = {
+    import org.scalatest.concurrent.ScalaFutures._
+    import org.scalatest.time.{Seconds, Span}
+    scala.concurrent.Future(op)(scala.concurrent.ExecutionContext.global)
+      .failed.futureValue(timeout(Span(60, Seconds)))
+  }
+
+  private def noStagedManifests(root: String): Boolean = {
+    val tmp = new Path(s"$root/_tmp")
+    !fs(root).exists(tmp) || fs(root).listStatus(tmp).isEmpty
+  }
+
+  test("a stray _commits/<n> directory fails every rebase flavor loud, " +
+      "naming the path") {
+    import spark.implicits._
+    val root = freshRoot("stray")
+    Txn.commit((1L to 3L).toDF("id"), root)
+    val stray = new Path(s"$root/_commits/2")
+    fs(root).mkdirs(stray)
+    val flavors = Seq[(String, () => Any)](
+      "append" -> (() => Txn.commitAppend(Seq(9L).toDF("id"), root)),
+      "delete" -> (() => Txn.commitDelete(spark, root, Seq("id"),
+        Seq(1L).toDF("id"))),
+      "restore" -> (() => Txn.restore(spark, root, 1L)),
+      "meta-only" -> (() => Txn.commitMetaOnly(spark, root, Map("op" -> "m"))))
+    flavors.foreach { case (name, op) =>
+      val err = failsWithin60s(op())
+      assert(err.isInstanceOf[IllegalStateException] &&
+        err.getMessage.contains(s"$root/_commits/2"),
+        s"$name: expected a loud failure naming the stray path, got $err")
+      assert(noStagedManifests(root), s"$name left a staged manifest")
+    }
+    assert(Txn.currentVersion(spark, root).contains(1L))
+  }
+
+  test("every publish flavor vs a racer at base+1: rebase flavors land at " +
+      "base+2 keeping the racer, pinned flavors throw, nothing staged") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.racefs.impl", classOf[RaceFs].getName)
+    type Table = (String, Boolean) // (root, partitioned)
+    def rows(i: Long) = (i, i % 2)
+    def table(tag: String, partitioned: Boolean): Table = {
+      val root = s"racefs://${freshRoot(tag)}"
+      Txn.commit((1L to 4L).map(rows).toDF("id", "p"), root,
+        partitionBy = if (partitioned) Some("p") else None)
+      (root, partitioned)
+    }
+    def freshDir(root: String, df: org.apache.spark.sql.DataFrame): String = {
+      val rel = s"data/${java.util.UUID.randomUUID()}"
+      df.write.parquet(s"$root/$rel")
+      rel
+    }
+    val base = (1L to 4L).toSet
+    // (flavor, partitioned base table, the flavor's commit, ids at the
+    // tip afterwards — None: the flavor is pinned and must throw)
+    val cases = Seq[(String, Boolean, Table => Any, Option[Set[Long]])](
+      ("append", false, t => Txn.commitAppend(Seq(rows(200L)).toDF("id", "p"),
+        t._1), Some(base + 100L + 200L)),
+      ("partitioned append", true, t => Txn.commitAppend(
+        Seq(rows(200L)).toDF("id", "p"), t._1, partitionBy = Some("p")),
+        Some(base + 100L + 200L)),
+      ("delete", false, t => Txn.commitDelete(spark, t._1, Seq("id"),
+        Seq(1L).toDF("id")), Some(base - 1L + 100L)),
+      ("upsert", false, t => Txn.commitUpsert(Seq(rows(2L)).toDF("id", "p"),
+        t._1, "id"), Some(base + 100L)),
+      ("restore", false, t => Txn.restore(spark, t._1, 1L), Some(base)),
+      ("meta-only", false, t => Txn.commitMetaOnly(spark, t._1,
+        Map("op" -> "m")), Some(base + 100L)),
+      ("publishDirAppend", false, t => Txn.publishDirAppend(spark, t._1,
+        freshDir(t._1, Seq(rows(300L)).toDF("id", "p"))),
+        Some(base + 100L + 300L)),
+      ("full commit", false, t => Txn.commit(Seq(rows(400L)).toDF("id", "p"),
+        t._1), Some(Set(400L))),
+      ("pinned commit", false, t => Txn.commit(Seq(rows(400L)).toDF("id", "p"),
+        t._1, expectedBase = Some(1L)), None),
+      ("publishDeltaIf", false, t => Txn.publishDeltaIf(spark, t._1, 1L,
+        Seq("id"), Some(freshDir(t._1, Seq(1L).toDF("id"))), None), None),
+      ("static partition overwrite", true, t => Txn.commitReplaceWhere(
+        Seq(rows(5L)).toDF("id", "p"), t._1, "p", Seq("p" -> 1L),
+        expectedBase = 1L), None),
+      ("dynamic partition overwrite", true, t => Txn.commitReplacePartitions(
+        Seq(rows(5L)).toDF("id", "p"), t._1, "p", expectedBase = 1L), None))
+    cases.foreach { case (name, partitioned, op, expectIds) => withClue(s"$name: ") {
+      val t @ (root, _) = table(name.replace(' ', '_'), partitioned)
+      val local = new Path(root).toUri.getPath
+      RaceFs.arm(s"$local/_commits/2") {
+        Txn.commitAppend(Seq(rows(100L)).toDF("id", "p"), root,
+          partitionBy = if (partitioned) Some("p") else None)
+      }
+      expectIds match {
+        case Some(want) =>
+          assert(op(t) == 3L, s"$name must rebase past the racer to base+2")
+          assert(ids(Txn.read(spark, root)) == want, name)
+        case None =>
+          intercept[java.util.ConcurrentModificationException](op(t))
+          assert(Txn.currentVersion(spark, root).contains(2L), name)
+      }
+      assert(RaceFs.fired, s"$name: the racer never ran before the publish")
+      // the racer's version is intact whatever the flavor did after it
+      assert(ids(Txn.readVersion(spark, root, 2L)) == base + 100L, name)
+      assert(noStagedManifests(local), s"$name left a staged manifest")
+    }}
+    // a clone whose empty target is initialized under it errors, and a
+    // clone onto a table that already has commits is refused
+    val src = table("clonesrc", partitioned = false)._1
+    val dst = s"racefs://${freshRoot("clonedst")}"
+    val dstLocal = new Path(dst).toUri.getPath
+    RaceFs.arm(s"$dstLocal/_commits/1") {
+      Txn.commit(Seq(rows(100L)).toDF("id", "p"), dst)
+    }
+    intercept[java.util.ConcurrentModificationException] {
+      Txn.cloneTable(spark, src, dst)
+    }
+    assert(RaceFs.fired && ids(Txn.read(spark, dst)) == Set(100L))
+    assert(noStagedManifests(dstLocal))
+    intercept[IllegalArgumentException](Txn.cloneTable(spark, src, dst))
+  }
+
+  test("malformed maintain confs fail naming the key") {
+    import spark.implicits._
+    val root = freshRoot("badconf")
+    Txn.commit((1L to 3L).toDF("id"), root)
+    Seq("spark.graft.txn.maintain.maxFiles",
+      "spark.graft.txn.maintain.maxTombstones",
+      "spark.graft.txn.maintain.targetBytes").foreach { key =>
+      spark.conf.set(key, "12x")
+      try {
+        val err = intercept[IllegalArgumentException](Txn.maintain(spark, root))
+        assert(err.getMessage.contains(key), err.getMessage)
+      } finally spark.conf.unset(key)
+    }
   }
 }
