@@ -1,32 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Tables.events fails loud on any non-UTC session (its
-      // TIMESTAMP_NTZ normalization is zone-sensitive); pin it here like
-      // every other shipped entry point so the bench doesn't depend on
-      // the host JVM's default zone (r7 advice)
-      .config("spark.sql.session.timeZone", "UTC")
-      // A session cycling through many DISTINCT query plans (186 here;
-      // any long-lived analytics driver) thrashes the whole-stage-codegen
-      // compiled-class cache at its 100-entry default: every pass of every
-      // query re-runs Janino on every codegen unit, ~0.1-0.2 s of pure
-      // driver compile per query that min-of-N can never amortize because
-      // the classes are already evicted again. Sized to hold the full
-      // registry's units (~10/query) with headroom; scale-independent
-      // (driver-side compile cost, no data-size interaction) — measured
-      // −30% on the 142 sub-second keys in an interleaved A/B
-      // (plans/r15/ab_codegen_cache_32c.txt). Static conf: must be set
-      // before the first session is created.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     // Warm-up: touch every input table once (parquet footer reads, FS
     // cache, codegen of the scan path) so the first timed query doesn't
     // pay cold-start costs that min-of-2 can't always hide (round-1
@@ -34,9 +11,10 @@ object Bench {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => System.err.println(s"[bench] warm-up $t failed: $e") }
     }
-    try Tables.events(spark, sfDir).count() catch { case _: Throwable => () }
+    try Tables.events(spark, sfDir).count()
+    catch { case NonFatal(e) => System.err.println(s"[bench] warm-up events failed: $e") }
     // min of two runs per query: the first pays codegen/broadcast
     // warm-up and is hostage to ambient host noise (observed 10x swings
     // on shared CPU); the min is the reproducible cost. A query that
@@ -59,7 +37,7 @@ object Bench {
       try {
         graft.ops.Q.withCached(fns(name)(spark, sfDir))(_.count())
         (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
+      } catch { case NonFatal(_) => -1.0 }
       finally spark.catalog.clearCache()
     }
     // Noise strategy for this shared host (bursty multi-minute CPU-steal
@@ -118,7 +96,7 @@ object Bench {
     }.mkString(",") + "}"
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_local.json"),
       s"""{"total":$total,"passes":$passes,"queries":$fullJson,"p50_p95":$pctJson,"errors":$errJson,"sf":"$sfDir"}""".getBytes)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) => System.err.println(s"[bench] bench_local.json: $e") }
     // The driver captures only the LAST 2000 chars of output, and sbt
     // appends a ~80-char "[success]" line after ours — a JSON line longer
     // than ~1850 chars gets its head truncated and becomes unparseable
@@ -139,7 +117,7 @@ object Bench {
     // about the timed region or the stdout contract changes.
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_last.json"),
       (out + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) => System.err.println(s"[bench] bench_last.json: $e") }
     println(out)
     spark.stop()
   }

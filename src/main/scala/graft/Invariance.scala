@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Partition-count invariance sweep (r7 verdict item 6): run every
@@ -26,14 +28,8 @@ object Invariance {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only: Set[String] = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
 
     def fingerprint(df: DataFrame): (String, Long) = {
       // decimal(38,0) sum: a plain long sum of 64-bit hashes overflows
@@ -48,7 +44,7 @@ object Invariance {
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       try graft.ops.Q.withCached(fn(spark, sfDir))(fingerprint)
       finally {
-        spark.conf.set("spark.sql.shuffle.partitions", cpus)
+        spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
         spark.catalog.clearCache()
       }
     }
@@ -58,11 +54,11 @@ object Invariance {
       .map { case (name, fn) =>
         val outcome =
           try {
-            val a = runAt(cpus, fn)
+            val a = runAt(cpus.toString, fn)
             val b = runAt("7", fn)
             if (a == b) "true"
             else { System.err.println(s"MISMATCH $name: x$cpus=$a x7=$b"); "false" }
-          } catch { case e: Throwable =>
+          } catch { case NonFatal(e) =>
             System.err.println(s"ERROR $name: ${e.getMessage}"); "\"error\""
           }
         System.err.println(s"$name -> $outcome")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Dev tool: dump formatted physical plans for the scale-claim evidence
@@ -10,13 +9,7 @@ import org.apache.spark.sql.execution.SparkPlan
 object Plans {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outFile) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val keys = Seq("scan_filter_pushdown", "join_broadcast_dims",
       "sort_multikey_limit", "agg_pricing_summary", "llm_similarity_topk",
       "llm_jaccard_near_dup", "llm_minhash_lsh", "llm_simhash_banded",

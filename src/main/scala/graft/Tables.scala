@@ -32,7 +32,7 @@ object Tables {
 
   /** Memoized per (session, dir, name): `spark.read.parquet` pays
     * ~75 ms of file listing + footer/schema resolution PER CALL
-    * (measured, Probe micro_overhead r6) — with ~2 table references
+    * (measured in r6) — with ~2 table references
     * per registry query that was ~30% of every sub-0.3 s query's
     * driver-measured cost, pure fixed overhead at any data scale.
     * Reusing the resolved frame is safe: DataFrames are immutable,

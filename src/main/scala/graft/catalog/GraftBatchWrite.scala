@@ -2,6 +2,8 @@ package graft.catalog
 
 import java.util.UUID
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -73,7 +75,7 @@ private[catalog] object GraftBatchWrite {
         // extra leading field the schema cannot describe
         val rendered =
           try row.toSeq(schema).mkString("[", ", ", "]")
-          catch { case _: Throwable => row.toString }
+          catch { case NonFatal(_) => row.toString }
         throw new IllegalStateException(
           s"CHECK ($sql) violated by row $rendered — statement aborted, " +
             "nothing was committed")

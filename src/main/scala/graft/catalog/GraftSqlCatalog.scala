@@ -815,7 +815,7 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
           else phys.select(colMap.map { case (p, l) => col(p).as(l) }: _*)))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new GraftWriteBuilder(root, info.schema(), version, partCol,
+    new GraftWriteBuilder(spark, root, info.schema(), version, partCol,
       statsCols, bloomCols, mapped = colMap.nonEmpty,
       physifyFrame = physify, physifySchemaF = physifySchema,
       checkSql = tableProps.get("check"))
@@ -1294,8 +1294,8 @@ private[catalog] class GraftV1Scan(pruned: DataFrame, label: String,
   * boundary on the write side. Schemas beyond the native writer's flat
   * primitive set (arrays, structs, decimals) fall back to the V1
   * bridge, whose Txn commits handle any Spark schema. */
-private[catalog] class GraftWriteBuilder(root: String, schema: StructType,
-    pinnedVersion: Long, partCol: Option[String],
+private[catalog] class GraftWriteBuilder(spark: SparkSession, root: String,
+    schema: StructType, pinnedVersion: Long, partCol: Option[String],
     statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
     mapped: Boolean = false,
     physifyFrame: DataFrame => DataFrame = identity,
@@ -1307,6 +1307,15 @@ private[catalog] class GraftWriteBuilder(root: String, schema: StructType,
 
   private var overwrite = false
   private var dynamic = false
+  /** `spark.graft.write.distribution`, read once per write: `clustered`
+    * (the default) or `none`; any other value fails naming the key. */
+  private val clustered: Boolean =
+    spark.conf.get("spark.graft.write.distribution", "clustered") match {
+      case "clustered" => true
+      case "none"      => false
+      case v => throw new IllegalArgumentException(
+        s"conf spark.graft.write.distribution must be clustered or none, got '$v'")
+    }
   /** Static `INSERT OVERWRITE t PARTITION (col=v, …)` (r13): the named
     * partition-equality tuple, replaced via one manifest extension. */
   private var replaceWhere: Option[Seq[(String, Any)]] = None
@@ -1395,9 +1404,7 @@ private[catalog] class GraftWriteBuilder(root: String, schema: StructType,
       // under clustering, and `none` reverts to the unclustered shape.
       override def requiredDistribution()
           : org.apache.spark.sql.connector.distributions.Distribution =
-        if (partCols.nonEmpty && replaceWhere.isEmpty &&
-            SparkSession.active.conf
-              .get("spark.graft.write.distribution", "clustered") == "clustered")
+        if (partCols.nonEmpty && replaceWhere.isEmpty && clustered)
           org.apache.spark.sql.connector.distributions.Distributions.clustered(
             partCols.map(c =>
               org.apache.spark.sql.connector.expressions.Expressions.identity(c)
@@ -1412,7 +1419,7 @@ private[catalog] class GraftWriteBuilder(root: String, schema: StructType,
       // evaluates per row in the task writers — a violating row fails
       // the task, the statement aborts, nothing publishes (r13)
       private val check = checkSql.map(c => (c,
-        GraftSqlCatalog.bindCheck(SparkSession.active, c, schema)))
+        GraftSqlCatalog.bindCheck(spark, c, schema)))
       override def toBatch: BatchWrite =
         if (replaceWhere.isDefined)
           new GraftBatchWrite(root, schema,

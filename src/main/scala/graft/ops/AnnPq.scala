@@ -68,8 +68,8 @@ object AnnPq {
     // here covers all m subspaces, so it overestimates the per-row size
     // m-fold, conservatively) fall back to the pre-r14 join + window
     // form. AnnPqSpec pins output equality of the two paths.
-    val bound = BigInt(subs.sparkSession.conf
-      .get("spark.graft.ann.maxCollectedCodebookBytes", (128L << 20).toString))
+    val bound = BigInt(Q.confLong(subs.sparkSession,
+      "spark.graft.ann.maxCollectedCodebookBytes", 128L << 20))
     if (codebooks.queryExecution.optimizedPlan.stats.sizeInBytes > bound) {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("vec_id", "sub_id")

@@ -707,9 +707,8 @@ object DedupOps {
     * of the component. */
   private[graft] def connectedComponents(
       nodes: org.apache.spark.sql.DataFrame,
-      pairs: org.apache.spark.sql.DataFrame,
-      tick: String => Unit = _ => ()): org.apache.spark.sql.DataFrame =
-    ccImpl(Some(nodes), pairs, tick)
+      pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    ccImpl(Some(nodes), pairs)
 
   /** CC over exactly the vertices that appear in an edge. The node set
     * is derived from the CHECKPOINTED edge list, so the (often
@@ -719,14 +718,12 @@ object DedupOps {
     * for the label init (measured: it cost llm_dedup_clusters ~2 s at
     * sf0.1 before this entry point existed). */
   private[graft] def connectedComponentsOfEdges(
-      pairs: org.apache.spark.sql.DataFrame,
-      tick: String => Unit = _ => ()): org.apache.spark.sql.DataFrame =
-    ccImpl(None, pairs, tick)
+      pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    ccImpl(None, pairs)
 
   private def ccImpl(
       nodesOpt: Option[org.apache.spark.sql.DataFrame],
-      pairs: org.apache.spark.sql.DataFrame,
-      tick: String => Unit): org.apache.spark.sql.DataFrame = {
+      pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // No session-conf tuning in the loop: round 3 flipped codegen/AQE off
     // and quartered shuffle partitions here, and the driver measured the
     // query 58% SLOWER (7.26 s → 11.47 s). With default confs (codegen
@@ -759,7 +756,7 @@ object DedupOps {
     // cluster set it near total cores — the level count only grows as
     // log4(parts), so 4096 parts is still just 6 levels.
     val edgeParts =
-      math.max(1, s.conf.get("spark.graft.cc.edgeParts", "4").toInt)
+      math.max(1L, Q.confLong(s, "spark.graft.cc.edgeParts", 4L)).toInt
     val p0 = cut(
       pairs.select(ca.as("src"), cb.as("dst")).repartition(edgeParts),
       eager = true)
@@ -776,7 +773,7 @@ object DedupOps {
     // collects `nodes`: labels for paired vertices are broadcast back
     // (bounded by 2× the threshold) and singletons coalesce to
     // themselves. Equality with the loop is pinned in LlmSpec.
-    val localThr = s.conf.get("spark.graft.cc.localEdgeThreshold", "0").toLong
+    val localThr = Q.confLong(s, "spark.graft.cc.localEdgeThreshold", 0L)
     if (localThr > 0 && p0.count() <= localThr) {
       val parent = new LongLongMap()
       def find(x: Long): Long = {
@@ -798,7 +795,6 @@ object DedupOps {
       import s.implicits._
       val local = parent.keysIterator.toSeq.map(v => (v, find(v)))
         .toDF("doc_id", "label")
-      tick(s"cc: local union-find (${parent.size} paired vertices)")
       return nodesOpt match {
         case None => local
         case Some(n) =>
@@ -880,8 +876,6 @@ object DedupOps {
         .repartition(parts), eager = true)
       // isEmpty on the just-materialized checkpoint is a limit-1 scan
       if (q.isEmpty) ccDone = true else cur = q
-      tick(s"cc: level ${rootMaps.size} (next parts $parts, " +
-        s"${if (ccDone) "closed" else "stitching"})")
     }
     // Descend the root chains back to the original vertices. At the
     // final level the quotient was empty, so every vertex there has one
@@ -1071,8 +1065,8 @@ object DedupOps {
     * families with millions of members); the r10 form's
     * row_number-over-label window put the hottest label in ONE
     * unsplittable task, while this aggregate form combines it
-    * map-side — clusterBestWindowForm is kept private as ScaleBench's
-    * measured contrast (CLUSTERBEST mode, planted every-doc cluster). */
+    * map-side (CLUSTERBEST_r13.json measured the r10 window form
+    * against it on a planted 99% mega-label). */
   val llmClusterBest: Q = Q(
     "llm_cluster_best",
     s"""WITH RECURSIVE
@@ -1132,24 +1126,6 @@ object DedupOps {
       .select(col("w.doc_id").as("doc_id"), col("label").as("cluster_id"),
         col("n_members"), (-col("w.nq")).as("quality_micro"))
       .orderBy("doc_id")
-
-  /** r10's window-form election, retained ONLY as ScaleBench's
-    * measured contrast (CLUSTERBEST mode): count + row_number over the
-    * label partition puts the hottest label in one unsplittable task.
-    * Not registered in any query plan since r11. */
-  private[graft] def clusterBestWindowForm(
-      scored: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byLabel = Window.partitionBy(col("label"))
-    scored
-      .withColumn("n_members", count(lit(1)).over(byLabel))
-      .withColumn("__rn", row_number().over(
-        byLabel.orderBy(col("quality_micro").desc, col("doc_id"))))
-      .where(col("__rn") === 1)
-      .select(col("doc_id"), col("label").as("cluster_id"),
-        col("n_members"), col("quality_micro"))
-      .orderBy("doc_id")
-  }
 
   /** Incremental shard-vs-corpus dedup — the batch form of the ingest
     * question "which of these NEW documents are genuinely new?". The

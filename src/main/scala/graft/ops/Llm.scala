@@ -481,8 +481,8 @@ object Llm {
     // bound reads the optimizer's size ESTIMATE (no extra action on the
     // hot path); an overestimate just picks the always-correct fallback.
     // LlmSpec pins output equality of the two paths.
-    val bound = BigInt(vecs.sparkSession.conf
-      .get("spark.graft.ann.maxCollectedCodebookBytes", (128L << 20).toString))
+    val bound = BigInt(Q.confLong(vecs.sparkSession,
+      "spark.graft.ann.maxCollectedCodebookBytes", 128L << 20))
     if (cs.queryExecution.optimizedPlan.stats.sizeInBytes > bound) {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("vec_id").orderBy(col("d2").asc, col("c_label"))

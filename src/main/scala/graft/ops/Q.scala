@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One driver-checkable query: the Spark build and (when SQL-expressible)
@@ -77,7 +79,7 @@ object Q {
 
   private def release(buf: scala.collection.mutable.ArrayBuffer[DataFrame]): Unit =
     buf.foreach { df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () }
+      try df.unpersist(blocking = false) catch { case NonFatal(_) => () }
     }
 
   /** A `spark.graft.*` integer conf, or `default` when unset. A value

@@ -80,8 +80,7 @@ object Rewrite {
     lineDedup(aug)
   }
 
-  /** (doc_id, line_id, line_text, line_hash) line view shared by the
-    * two election forms below (and ScaleBench's hash-frequency census). */
+  /** (doc_id, line_id, line_text, line_hash) line view of [[lineDedup]]. */
   private[graft] def lineView(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     docs
       .withColumn("toks", split(col("text"), " "))
@@ -114,9 +113,8 @@ object Rewrite {
     * form: it moved the full line frame TWICE (hash partition, then
     * doc regroup); this moves the combined hash groups once, the
     * winner rows once, and (doc_id, count) pairs once — strictly fewer
-    * bytes AND skew-proof. ScaleBench's boilerplate mode measures both
-    * forms on a planted every-doc line ([[lineDedupWindowForm]] is
-    * kept privately as that contrast). */
+    * bytes AND skew-proof. BOILERPLATE_r13.json measured the r8 window
+    * form against this one on a planted every-doc line. */
   def lineDedup(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val lines = lineView(docs)
     // per-doc denominators: map-side-combined counts, never text
@@ -140,27 +138,6 @@ object Rewrite {
         coalesce(col("clean_text"), lit("")).as("clean_text"))
       .orderBy("doc_id")
   }
-
-  /** The r8 window-election form, kept ONLY as ScaleBench's degradation
-    * baseline for the planted-boilerplate measurement (BOILERPLATE_r09):
-    * the `row_number` window makes an f-duplicated line one f-row
-    * single-task sort. Not used by any registered query. */
-  private[graft] def lineDedupWindowForm(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    lineView(docs)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("line_hash").orderBy("doc_id", "line_id")))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_lines"),
-        sum(when(col("rn") === 1, 1L).otherwise(0L)).as("n_kept"),
-        concat_ws(" ", expr(
-          """transform(
-            |  array_sort(collect_list(
-            |    CASE WHEN rn = 1 THEN struct(line_id, line_text) END)),
-            |  x -> x.line_text)""".stripMargin)).as("clean_text"))
-      .select(col("doc_id"), col("n_lines").cast("bigint").as("n_lines"),
-        col("n_kept").cast("bigint").as("n_kept"), col("clean_text"))
-      .orderBy("doc_id")
 
   /** The MERGE change batch, derived identically on both surfaces: the
     * last 30 days of orders (a "recent change feed" — customers with no

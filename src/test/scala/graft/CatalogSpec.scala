@@ -502,6 +502,22 @@ class CatalogSpec extends SparkSpec {
     assert(got == 5000L)
   }
 
+  test("a malformed spark.graft.write.distribution fails naming the key") {
+    val c = sqlCat("baddist")
+    spark.sql(s"CREATE TABLE $c.bd (id BIGINT, yr BIGINT) PARTITIONED BY (yr)")
+    spark.conf.set("spark.graft.write.distribution", "clusterd")
+    try {
+      val err = intercept[IllegalArgumentException](
+        spark.sql(s"INSERT INTO $c.bd VALUES (1, 2020)"))
+      assert(err.getMessage.contains("spark.graft.write.distribution"), err.getMessage)
+    } finally spark.conf.unset("spark.graft.write.distribution")
+    assert(spark.sql(s"SELECT count(*) FROM $c.bd").head().getLong(0) == 0L)
+    spark.conf.set("spark.graft.write.distribution", "none")
+    try spark.sql(s"INSERT INTO $c.bd VALUES (1, 2020)")
+    finally spark.conf.unset("spark.graft.write.distribution")
+    assert(spark.sql(s"SELECT count(*) FROM $c.bd").head().getLong(0) == 1L)
+  }
+
   test("V2 SQL catalog: declared-key tables run UPDATE/MERGE/DELETE " +
       "through the O(batch) delta path — manifest extension, no rewrite") {
     import spark.implicits._

@@ -27,6 +27,14 @@ class ExtensionsSpec extends SparkSpec {
   private def fn(reg: SimpleFunctionRegistry, name: String, args: Expression*) =
     reg.lookupFunction(FunctionIdentifier(name), args.toSeq)
 
+  test("the test session is GraftSession.local(4): UTC, a 4096-entry " +
+      "codegen cache and 4 shuffle partitions") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "4096")
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+  }
+
   test("extensions inject the COMPLETE native-function list") {
     // the production path must expose exactly what self-registration
     // exposes; the two lists drifted once (3 of 7 functions missing

@@ -1307,4 +1307,29 @@ class TxnSpec extends SparkSpec {
       } finally spark.conf.unset(key)
     }
   }
+
+  test("malformed cc, ann and stream-state confs fail naming the key") {
+    import spark.implicits._
+    import graft.ops.{AnnPq, DedupOps, Llm}
+    def failsNaming(key: String)(run: => Any): Unit = {
+      spark.conf.set(key, "12x")
+      try {
+        val err = intercept[IllegalArgumentException](run)
+        assert(err.getMessage.contains(key), err.getMessage)
+      } finally spark.conf.unset(key)
+    }
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
+    failsNaming("spark.graft.cc.edgeParts")(
+      DedupOps.connectedComponentsOfEdges(pairs))
+    failsNaming("spark.graft.cc.localEdgeThreshold")(
+      DedupOps.connectedComponentsOfEdges(pairs))
+    val emb = Llm.scaledEmb(spark, sf("sf0.001"))
+    val cents = Llm.trainIvfCentroids(emb.select("vec_id", "e"), nlist = 2, iters = 1)
+    failsNaming("spark.graft.ann.maxCollectedCodebookBytes")(
+      Llm.nearestLists(emb, cents, 1))
+    failsNaming("spark.graft.ann.maxCollectedCodebookBytes")(
+      AnnPq.buildAnnPqIndex(emb))
+    failsNaming("spark.graft.stream.statePartitions")(
+      SparkEntry.queries("stream_cdc_source")(spark, sf("sf0.001")))
+  }
 }
